@@ -138,13 +138,13 @@ def main():
     ap.add_argument("--seconds", type=int, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args()
-    start = time.time()
 
     for need in (os.path.join(REPO, "build.sbt"), os.path.join(REPO, "src", "main", "scala"),
                  DATA, CHECK_DATA):
         if not os.path.exists(need):
             die(f"missing {need}: run from a full checkout of the repository")
     launch = build()
+    start = time.time()  # a build may take long; the run's own budget starts here
 
     work = os.path.join(WORK, "run")
     shutil.rmtree(work, ignore_errors=True)
