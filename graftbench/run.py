@@ -11,7 +11,9 @@ SQL in oracle.py, the pipeline outputs inside the JVM) and prints
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
 Exit code 0 when every check passed, 1 when a check failed, 2 when the run
-could not be made (no sources to build, build or JVM failure, timeout).
+could not be made (no sources to build, build or JVM failure, timeout, or a
+measurement the harness itself spoiled: the stream's generator fell behind
+its schedule or the stream's backlog grew).
 """
 import argparse
 import hashlib
@@ -128,6 +130,8 @@ def run_jvm(launch, args, work, budget):
             result = json.loads(line[len("RESULT "):])
     if proc.returncode != 0 or result is None:
         die(f"workload failed (exit {proc.returncode})")
+    if result["invalid"]:
+        die("measurement not valid: " + "; ".join(result["invalid"]))
     return result
 
 
@@ -150,6 +154,7 @@ def main():
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     result = run_jvm(launch, args, work, DEADLINE_S - (time.time() - start))
+    log(f"workload ran in {time.time() - start:.1f}s")
     problems = list(result["problems"])
     failed = result["failed"]
     if args.workload == "catalog_core":
@@ -160,6 +165,7 @@ def main():
             bad = oracle.check(os.path.join(work, "catalog", "check"), json.load(f))
         problems += bad
         failed += len(bad)
+        log(f"oracle check done at {time.time() - start:.1f}s")
     spans = os.path.join(work, f"spans-{args.workload}.jsonl")
     if os.path.exists(spans):
         shutil.copy(spans, os.path.join(WORK, f"spans-{args.workload}.jsonl"))

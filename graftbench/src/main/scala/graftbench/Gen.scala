@@ -53,6 +53,11 @@ final case class Composition(
   * type carries half the valid lines. Event times replay 30 days in arrival
   * order, so a whole input covers every day while a short slice of a stream
   * covers a few.
+  *
+  * Every share below is an assumption, not a measurement: no recorded
+  * traffic sample exists to derive them from. They are chosen so that
+  * every decode, parse and route branch runs in every micro-batch; the
+  * README gives the reason for each.
   */
 object Gen {
   val Whitelist: Seq[String] = Seq("app", "nginx", "api", "auth", "billing")
@@ -62,17 +67,17 @@ object Gen {
   val CwlPerMessage = 5
   val RecordsPerEvent = 100
 
-  /** Kinesis-record kinds and their shares (per mille). */
+  /** Kinesis-record kinds and their assumed shares (per mille). */
   val Kinds: Seq[(String, Int)] = Seq(
     "plain" -> 450, "kpl" -> 200, "gzip" -> 150, "cwl_data" -> 100,
     "cwl_control" -> 20, "corrupt_gzip" -> 30, "non_json" -> 50)
 
-  /** Log-payload variants and their shares (per mille). */
+  /** Log-payload variants and their assumed shares (per mille). */
   val Variants: Seq[(String, Int)] = Seq(
     "valid" -> 900, "missing_log_id" -> 15, "missing_time" -> 15,
     "bad_time" -> 10, "missing_log_type" -> 10, "whitelist_miss" -> 50)
 
-  /** Valid-line log types and their shares (per mille). */
+  /** Valid-line log types and their assumed shares (per mille). */
   val LogTypes: Seq[(String, Int)] = Seq(
     "app" -> 500, "nginx" -> 200, "api" -> 150, "auth" -> 100, "billing" -> 50)
 

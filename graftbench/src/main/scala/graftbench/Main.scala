@@ -36,16 +36,26 @@ object Main {
     * still carries JIT warm-up, the median of the rest does not.
     */
   val MinBatchOps = 4
-  /** Kinesis records of the warm-up stream's input. */
-  val WarmRecords = 1000
   /** Offered `pipeline_stream` rate, in BASELINE shards of 1,000 rec/s. */
   val StreamShards = 1
   /** The generator writes one file per tick; the trigger takes whole ticks. */
   val StreamTickMs = 250
   /** Twice the micro-batch time, so batches stay independent. */
   val StreamTriggerMs = 2000
-  /** Records scheduled in the first trigger interval are warm-up. */
-  val StreamWarmupMs = 2000
+  /** Records scheduled in the first two trigger intervals are warm-up: the
+    * first micro-batch of a session also pays the streaming engine's
+    * start-up, and may overrun its interval.
+    */
+  val StreamWarmupMs = 2 * StreamTriggerMs
+  /** Measured trigger intervals after the warm-up ones, whatever `--seconds`
+    * is: the stream's percentiles cover this many micro-batches. Each one
+    * adds 2 s to every `pipeline` run, which already takes about a minute.
+    */
+  val StreamMeasuredTriggers = 8
+  /** A stream run whose generator wrote its files later than this (p99)
+    * behind schedule measured the host, not the program: it is not made.
+    */
+  val MaxLateMs = 50
 
   val CatalogQueries: Seq[String] = Seq(
     "q01_pricing_summary", "q37_pipeline_parse", "q44_neardup_exact", "q67_salted_join",
@@ -65,7 +75,7 @@ object Main {
   val EndToEnd: Seq[(String, String)] = Seq(
     "setup_s" -> "s", "rec_per_s" -> "1/s", "mib_per_s" -> "MiB/s",
     "latency_p50_ms" -> "ms", "latency_p99_ms" -> "ms", "wall_s" -> "s",
-    "drain_s" -> "s", "peak_rss_mib" -> "MiB")
+    "peak_mem_mib" -> "MiB")
 
   val PerLayer: Seq[(String, String)] = Seq(
     "sources.self_s" -> "s", "pipeline.decode.self_s" -> "s",
@@ -80,6 +90,7 @@ object Main {
     "streaming.latest_offset_ms_p50" -> "ms", "streaming.planning_ms_p50" -> "ms",
     "streaming.wal_commit_ms_p50" -> "ms", "streaming.commit_ms_p50" -> "ms",
     "streaming.idle_frac" -> "ratio", "streaming.backlog_records_max" -> "count",
+    "streaming.drain_s" -> "s",
     "streaming.latency_samples" -> "count", "generator.late_ms_p99" -> "ms",
     "spark.jobs" -> "count", "spark.stages" -> "count", "spark.tasks" -> "count",
     "spark.driver_s" -> "s", "spark.task_cpu_s" -> "s", "spark.task_run_s" -> "s",
@@ -99,11 +110,14 @@ object Main {
 
   /** What a run reports. `metrics` holds only what the run measured; the
     * rest of the reported set reads 0 (a layer this workload never runs).
+    * `invalid` says why the measurement itself cannot be trusted (the
+    * harness fell behind), as opposed to a failed output check.
     */
   final class Result {
     var attempted = 0L
     var failed = 0L
     val problems = mutable.ArrayBuffer.empty[String]
+    val invalid = mutable.ArrayBuffer.empty[String]
     val metrics = mutable.LinkedHashMap.empty[String, Double]
     def fail(n: Long, why: String): Unit = { failed += n; problems += why }
   }
@@ -119,14 +133,15 @@ object Main {
       case "catalog_core" => Catalog.run(o, r)
       case w => throw new IllegalArgumentException(s"unknown workload $w")
     }
-    r.metrics("peak_rss_mib") = peakRssMib()
+    if (!o.trace) r.metrics("peak_mem_mib") = Mem.peakMib()
     val wanted = if (o.trace) PerLayer else EndToEnd
     val ms = wanted.map { case (n, u) =>
       s"${Gen.jsonString(n)}:{\"value\":${num(r.metrics.getOrElse(n, 0.0))},\"unit\":${Gen.jsonString(u)}}"
     }
-    val problems = r.problems.map(Gen.jsonString).mkString("[", ",", "]")
+    def list(xs: Seq[String]) = xs.map(Gen.jsonString).mkString("[", ",", "]")
     println(s"""RESULT {"attempted":${r.attempted},"failed":${r.failed},""" +
-      s""""problems":$problems,"metrics":${ms.mkString("{", ",", "}")}}""")
+      s""""problems":${list(r.problems.toSeq)},"invalid":${list(r.invalid.toSeq)},""" +
+      s""""metrics":${ms.mkString("{", ",", "}")}}""")
     System.out.flush()
     // the result is out; skip Spark's shutdown (the runner removes the
     // work directory)
@@ -137,10 +152,6 @@ object Main {
     if (d.isNaN || d.isInfinite) "0" else java.math.BigDecimal.valueOf(d).toPlainString
 
   def log(msg: String): Unit = System.err.println(s"[graftbench] $msg")
-
-  def peakRssMib(): Double =
-    Files.readAllLines(Paths.get("/proc/self/status")).asScala
-      .find(_.startsWith("VmHWM:")).map(_.split("\\s+")(1).toDouble / 1024.0).getOrElse(0.0)
 
   /** Linear-interpolated percentile (numpy's default), `p` in [0, 100]. */
   def pct(xs: Seq[Double], p: Double): Double = {
@@ -324,8 +335,9 @@ object PipelineCommon {
   *
   *   batch  closed-loop `LogPipeline.run` for `--seconds` (throughput, time
   *          per batch);
-  *   stream open-loop `LogStreamJob` for `--seconds` of offered load after
-  *          one warm-up trigger interval (per-record latency, drain).
+  *   stream open-loop `LogStreamJob` for [[Main.StreamMeasuredTriggers]]
+  *          trigger intervals of offered load after two warm-up intervals
+  *          (per-record latency, drain).
   */
 object Pipeline {
   import Main._
@@ -335,7 +347,7 @@ object Pipeline {
     val root = s"${o.work}/pipeline"
     val rate = StreamShards * 1000
     val perFile = rate * StreamTickMs / 1000
-    val nFiles = (StreamWarmupMs + o.seconds * 1000) / StreamTickMs
+    val nFiles = (StreamWarmupMs + StreamMeasuredTriggers * StreamTriggerMs) / StreamTickMs
     val ms = (i: Int) => i * 1000.0 / rate
     val (spark, (in, stream)) = setUp(o, r) { spark =>
       rmrf(root)
@@ -355,32 +367,21 @@ object Pipeline {
 
     // checked warm-up run outside the timed region
     PipelineBatch.loop(spark, o, r, in, root, 0, None)
-    // the first query of a session pays the streaming engine's start-up:
-    // drain one small input through the same job before the timed stream
-    def warmStream(): Unit = {
-      new File(s"$root/warm/in").mkdirs()
-      writeLines(s"$root/warm/in/0.json", Gen.lambdaEvents(stream.recs.take(WarmRecords).toSeq, 0L))
-      LogStreamJob.start(KinesisEventSource.streamLambdaEventDir(spark, s"$root/warm/in"),
-        cfg, s"$root/warm/out", s"$root/warm/ckpt").awaitTermination()
-      rmrf(s"$root/warm")
-    }
     // batch first: its runs bring the JIT close to steady state, so the
     // stream's micro-batches stay well inside the trigger interval
     if (!o.trace) {
+      Mem.start()
       val times = PipelineBatch.loop(spark, o, r, in, root, o.seconds.toDouble, None, MinBatchOps)
-      warmStream()
       val plain = PipelineStream.once(spark, r, stream, s"$root/stream", rate, perFile, nFiles, None)
       r.metrics("rec_per_s") = BatchRecords / median(times)
       r.metrics("mib_per_s") = in.bytes / (1 << 20).toDouble / median(times)
       r.metrics("wall_s") = median(times)
       r.metrics("latency_p50_ms") = median(plain.latMs)
       r.metrics("latency_p99_ms") = pct(plain.latMs, 99)
-      r.metrics("drain_s") = plain.drain
     } else {
       val tl @ (t, l) = traced(spark, o)
       val before = l.snapshot; val gc0 = jvmGcSeconds(); val w0 = System.currentTimeMillis()
       PipelineBatch.traceLayers(spark, o, r, in, root, t)
-      warmStream()
       val s = t.span("streaming.run")(
         PipelineStream.once(spark, r, stream, s"$root/stream", rate, perFile, nFiles, Some(tl)))
       Bus.drain(spark.sparkContext)
@@ -395,9 +396,10 @@ object Pipeline {
       r.metrics("streaming.planning_ms_p50") = p50("queryPlanning")
       r.metrics("streaming.wal_commit_ms_p50") = p50("walCommit")
       r.metrics("streaming.commit_ms_p50") = p50("commitOffsets")
-      val busyMs = s.batches.map(b => b.commitMs - b.startMs.toDouble.max(s.measuredFrom)).sum
-      r.metrics("streaming.idle_frac") = 1 - busyMs / 1e3 / s.span
+      val busyMs = s.batches.map(b => b.commitMs - b.startMs).sum
+      r.metrics("streaming.idle_frac") = if (s.span > 0) 1 - busyMs / 1e3 / s.span else 0.0
       r.metrics("streaming.backlog_records_max") = (s.backlog :+ 0.0).max
+      r.metrics("streaming.drain_s") = s.drain
       r.metrics("streaming.latency_samples") = s.latMs.size
       r.metrics("generator.late_ms_p99") = pct(s.lateMs, 99)
       finishTrace(spark, o, r, t, l)
@@ -457,7 +459,8 @@ object PipelineBatch {
     */
   def traceLayers(spark: SparkSession, o: Opts, r: Result, in: Input, root: String,
                   t: Trace): Unit = {
-    // the first runs after the checked one still carry JIT warm-up
+    // the runs after the checked one still speed up as the JIT warms,
+    // faster than ABBA order can cancel
     loop(spark, o, r, in, root, 0, None, 2)
     val abba = Seq(true, false, false, true, true, false, false, true)
     val ops = abba.map(on => on -> loop(spark, o, r, in, root, 0, if (on) Some(t) else None).head)
@@ -526,13 +529,17 @@ object PipelineStream {
   final case class Prepared(recs: Array[KRecord], comp: Composition)
 
   /** One stream run, reduced to what the metrics need. Only records
-    * scheduled after the first [[StreamWarmupMs]] are measured.
+    * scheduled after the first [[StreamWarmupMs]] are measured; `batches`
+    * are the micro-batches that hold them. At each of their commits,
+    * `backlog` samples the records scheduled but not yet committed and
+    * `drainMs` the time since the batch's last scheduled record.
     */
   final case class Stats(latMs: Seq[Double], batches: Seq[Progress], recsPerBatch: Map[Long, Long],
-                         lateMs: Seq[Double], backlog: Seq[Double], measuredFrom: Double,
-                         lastCommit: Double, lastRecordMs: Double) {
-    def span: Double = (lastCommit - measuredFrom) / 1e3
-    def drain: Double = (lastCommit - lastRecordMs) / 1e3
+                         lateMs: Seq[Double], backlog: Seq[Double], drainMs: Seq[Double],
+                         lastCommit: Double) {
+    def span: Double = batches.headOption.fold(0.0)(b => (lastCommit - b.startMs) / 1e3)
+    /** Median over the measured batches: one batch alone is too noisy. */
+    def drain: Double = median(drainMs) / 1e3
   }
 
   /** Start the job, feed it on schedule, wait until every file is
@@ -560,10 +567,13 @@ object PipelineStream {
     }
     // absolute schedule: record i is created at t0 + i/rate; file k is
     // written when its last record is due. Processing-time triggers fire on
-    // multiples of the interval; files land mid-way between two of them, so
-    // every trigger finds the same whole number of files.
-    val t0 = ((System.currentTimeMillis() + 500) / StreamTriggerMs + 1) * StreamTriggerMs +
-      StreamTriggerMs / 2 + StreamTickMs / 2
+    // multiples of the interval. With T a trigger time and t0 half a tick
+    // before it, the files of interval j land at T + j*interval + tick/2,
+    // + 3*tick/2, ..., half a tick clear of both triggers, so the trigger
+    // at T + (j+1)*interval takes exactly the files of interval j: the
+    // warm-up groups first, then one whole group per measured trigger.
+    val t0 = ((System.currentTimeMillis() + 500) / StreamTriggerMs + 1) * StreamTriggerMs -
+      StreamTickMs / 2
     val files = (0 until nFiles).map { k =>
       val g = prep.recs.slice(k * perFile, (k + 1) * perFile)
         .map(x => x.copy(createdMs = t0 + x.createdMs))
@@ -597,11 +607,13 @@ object PipelineStream {
     val warmFiles = StreamWarmupMs / StreamTickMs
     val lat = mutable.ArrayBuffer.empty[Double]
     val recsPerBatch = mutable.HashMap.empty[Long, Long].withDefaultValue(0L)
+    val lastRecord = mutable.HashMap.empty[Long, Double]
     val missing = (0 until nFiles).filterNot { k =>
       fileBatch.get(f"f-$k%06d.json").filter(commit.contains) match {
         case Some(b) =>
           recsPerBatch(b) += perFile
           if (k >= warmFiles) {
+            lastRecord(b) = lastRecord.getOrElse(b, 0.0) max (t0 + prep.recs((k + 1) * perFile - 1).createdMs)
             val c = commit(b); var i = k * perFile
             while (i < (k + 1) * perFile) { lat += c - (t0 + prep.recs(i).createdMs); i += 1 }
           }
@@ -612,23 +624,44 @@ object PipelineStream {
     if (missing.nonEmpty) r.fail(1, s"${missing.size} input files never committed")
     val bad = mismatches(prep.comp.prefixes, readOutput(out))
     if (bad > 0) r.fail(1, s"stream output: $bad prefixes differ")
-    val measuredFrom = t0 + StreamWarmupMs.toDouble
     val lastCommit = fileBatch.get(f"f-${nFiles - 1}%06d.json").flatMap(commit.get)
       .getOrElse(System.currentTimeMillis()).toDouble
     // records scheduled but not yet committed, sampled at each commit
     var done = 0L
     val backlog = all.map { p =>
       done += recsPerBatch(p.batchId)
-      ((p.commitMs - t0) * rate / 1000.0).max(0).min(prep.recs.length.toDouble) - done
-    }
-    val s = Stats(lat.toSeq, all.filter(_.commitMs > measuredFrom), recsPerBatch.toMap,
-      late.toSeq, backlog, measuredFrom, lastCommit, t0 + prep.recs.last.createdMs)
+      p.batchId -> (((p.commitMs - t0) * rate / 1000.0).max(0).min(prep.recs.length.toDouble) - done)
+    }.toMap
+    val measured = all.filter(p => lastRecord.contains(p.batchId))
+    val s = Stats(lat.toSeq, measured, recsPerBatch.toMap, late.toSeq,
+      measured.map(p => backlog(p.batchId)), measured.map(p => p.commitMs - lastRecord(p.batchId)),
+      lastCommit)
     log("stream batches (start offset ms/trigger ms/records): " + all.map(p =>
       s"${p.startMs - t0.toLong}/${p.ms("triggerExecution").toLong}/${recsPerBatch(p.batchId)}").mkString(" "))
-    log(f"stream: batches=${all.size} p50=${median(s.latMs)}%.1f p99=${pct(s.latMs, 99)}%.1f " +
-      f"drain=${s.drain}%.3f late_p99=${pct(s.lateMs, 99)}%.1f backlog_max=${(backlog :+ 0.0).max}%.0f")
+    log(f"stream: measured batches=${measured.size} p50=${median(s.latMs)}%.1f p99=${pct(s.latMs, 99)}%.1f " +
+      f"drain=${s.drain}%.3f late_p99=${pct(s.lateMs, 99)}%.1f backlog_max=${(s.backlog :+ 0.0).max}%.0f")
+    checkHealth(r, s, perFile * (StreamTriggerMs / StreamTickMs))
     rmrf(root)
     s
+  }
+
+  /** The stream numbers hold only if the generator kept its schedule and
+    * the job kept up with it. The commit-time backlog jitters by the batch
+    * duration from one commit to the next, so growth compares the median of
+    * the first and the last third of the measured commits and allows half a
+    * trigger interval's records: a job that falls behind adds a whole
+    * interval's records per missed trigger.
+    */
+  def checkHealth(r: Result, s: Stats, perTrigger: Int): Unit = {
+    val late = pct(s.lateMs, 99)
+    if (late > MaxLateMs)
+      r.invalid += f"generator late p99 $late%.1f ms > $MaxLateMs ms: the host could not keep the schedule"
+    val third = s.backlog.size / 3
+    if (third > 0) {
+      val growth = median(s.backlog.takeRight(third)) - median(s.backlog.take(third))
+      if (growth > perTrigger / 2)
+        r.invalid += f"stream backlog grew by $growth%.0f records over the run: offered rate not sustained"
+    }
   }
 
   /** File name → batch id, from a file-stream source log (plain and
@@ -686,7 +719,11 @@ object Catalog {
       qs.map { q =>
         pool.submit(new Runnable {
           def run(): Unit =
-            try q.build(spark, o.checkData).write.mode("overwrite").parquet(s"$root/check/${q.name}")
+            try {
+              val (_, dt) = secs(q.build(spark, o.checkData).write.mode("overwrite")
+                .parquet(s"$root/check/${q.name}"))
+              log(f"checked ${q.name} ${dt}%.1fs")
+            }
             catch { case e: Throwable => checkFailed.add(q.name); log(s"${q.name} failed: ${e.getMessage}") }
         })
       }.foreach(_.get())
@@ -724,6 +761,7 @@ object Catalog {
     }
 
     if (!o.trace) {
+      Mem.start()
       val samples = mutable.LinkedHashMap(qs.map(_.name -> mutable.ArrayBuffer.empty[Double]): _*)
       val start = System.nanoTime()
       var passes = 0
@@ -741,8 +779,6 @@ object Catalog {
       r.metrics("mib_per_s") = bytes / (1 << 20) / wall
       r.metrics("latency_p50_ms") = median(per.values.toSeq) * 1e3
       r.metrics("latency_p99_ms") = pct(per.values.toSeq, 99) * 1e3
-      // the pass's tail: the last half of the queries, in pass order
-      r.metrics("drain_s") = qs.takeRight(qs.size / 2).map(q => per(q.name)).sum
     } else {
       // each query untraced and traced, alternating which goes first, so
       // the overhead estimate carries no warm-up bias
