@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Run one graftbench workload and print its result as the last stdout line.
 
-    python3 graftbench/run.py --workload pipeline --seed 1 --seconds 10 --trace 0
+    python3 graftbench/run.py --workload pipeline --seed 1 --seconds 6 --trace 0
 
 Builds the program and the benchmark from the checkout's sources (sbt,
 offline) when they changed since the last build, runs the workload in one
@@ -27,11 +27,11 @@ import time
 
 BENCH = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(BENCH)
-DATA = os.path.join(BENCH, "data", "sf0.1")
-CHECK_DATA = os.path.join(BENCH, "data", "sf0.01")
+# each workload's corpus: the generator's event rows, the queries' tables
+DATA = {"pipeline": os.path.join(BENCH, "data", "sf0.1"),
+        "catalog_core": os.path.join(BENCH, "data", "sf0.01")}
 WORK = os.path.join(BENCH, "work")
 TARGET = os.path.join(BENCH, "target")
-WORKLOADS = ("pipeline", "catalog_core")
 DEADLINE_S = 170.0
 BUILD_DEADLINE_S = 840.0
 HEAP = "3g"
@@ -114,8 +114,7 @@ def run_jvm(launch, args, work, budget):
     cmd = (["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", f"-Djava.io.tmpdir={tmp}"] + jvm +
            ["-cp", cp, "graftbench.Main", "--workload", args.workload,
             "--seed", str(args.seed), "--seconds", str(args.seconds),
-            "--trace", str(args.trace), "--work", work, "--data", DATA,
-            "--check-data", CHECK_DATA])
+            "--trace", str(args.trace), "--work", work, "--data", DATA[args.workload]])
     proc = subprocess.Popen(cmd, cwd=work, stdout=subprocess.PIPE,
                             start_new_session=True)
     try:
@@ -137,14 +136,14 @@ def run_jvm(launch, args, work, budget):
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", required=True, choices=WORKLOADS)
+    ap.add_argument("--workload", required=True, choices=sorted(DATA))
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=int, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args()
 
     for need in (os.path.join(REPO, "build.sbt"), os.path.join(REPO, "src", "main", "scala"),
-                 DATA, CHECK_DATA):
+                 DATA[args.workload]):
         if not os.path.exists(need):
             die(f"missing {need}: run from a full checkout of the repository")
     launch = build()

@@ -30,26 +30,42 @@ import graft.streaming.LogStreamJob
   */
 object Main {
   val SetupReps = 3
-  /** Kinesis records per `pipeline_batch` run (one batch). */
-  val BatchRecords = 20000
-  /** The timed batch loop runs at least this many times: the first one
-    * still carries JIT warm-up, the median of the rest does not.
+  /** Kinesis records per `pipeline_batch` run (one batch). A run's time is
+    * mostly per-file and per-job cost: half as many records take about as
+    * long.
     */
-  val MinBatchOps = 4
+  val BatchRecords = 20000
+  /** Batch runs before any timed phase; the first pays the cold JIT and
+    * codegen. The stream's micro-batches then warm the same code further.
+    */
+  val WarmBatchOps = 1
+  /** The timed batch loop runs at least this many times and reports the
+    * fastest. Other tenants' load on a shared host only ever slows a run,
+    * and it comes in bursts of seconds to a minute: in ten runs the median
+    * of three batch runs spread 0.52 (Q3 - Q1 over the median), the fastest
+    * 0.20.
+    */
+  val MinBatchOps = 3
   /** Offered `pipeline_stream` rate, in BASELINE shards of 1,000 rec/s. */
   val StreamShards = 1
   /** The generator writes one file per tick; the trigger takes whole ticks. */
   val StreamTickMs = 250
-  /** Twice the micro-batch time, so batches stay independent. */
+  /** About twice the micro-batch time, so batches stay independent. */
   val StreamTriggerMs = 2000
-  /** Records scheduled in the first two trigger intervals are warm-up: the
-    * first micro-batch of a session also pays the streaming engine's
-    * start-up, and may overrun its interval.
+  /** Files per trigger interval. */
+  val StreamIntervalFiles = StreamTriggerMs / StreamTickMs
+  /** One interval's files are in place before the stream starts: its first
+    * micro-batch takes them along with the streaming engine's start-up.
     */
-  val StreamWarmupMs = 2 * StreamTriggerMs
-  /** Measured trigger intervals after the warm-up ones, whatever `--seconds`
-    * is: the stream's percentiles cover this many micro-batches. Each one
-    * adds 2 s to every `pipeline` run, which already takes about a minute.
+  val StreamStartFiles = StreamIntervalFiles
+  /** Scheduled trigger intervals before the measured ones: the first
+    * micro-batch after the pause that aligns the schedule to the trigger
+    * runs up to twice as long as the ones after it, even after warm-up
+    * batches.
+    */
+  val StreamWarmTriggers = 1
+  /** Measured trigger intervals after the warm-up ones, whatever
+    * `--seconds` is: the stream's percentiles cover this many micro-batches.
     */
   val StreamMeasuredTriggers = 8
   /** A stream run whose generator wrote its files later than this (p99)
@@ -102,11 +118,11 @@ object Main {
         s"catalog.$q.stages" -> "count", s"catalog.$q.shuffle_mib" -> "MiB")
     }
 
-  /** `data` is the measured corpus (sf0.1); `checkData` the smaller one
-    * (sf0.01) the catalog's checked pass runs on.
+  /** `data` is the workload's corpus: the generator's event rows for
+    * `pipeline`, the queries' tables for `catalog_core`.
     */
   final case class Opts(workload: String, seed: Long, seconds: Int, trace: Boolean,
-                        work: String, data: String, checkData: String)
+                        work: String, data: String)
 
   /** What a run reports. `metrics` holds only what the run measured; the
     * rest of the reported set reads 0 (a layer this workload never runs).
@@ -125,15 +141,14 @@ object Main {
   def main(argv: Array[String]): Unit = {
     val kv = argv.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     val o = Opts(kv("workload"), kv("seed").toLong, kv("seconds").toInt, kv("trace") == "1",
-      new File(kv("work")).getAbsolutePath, new File(kv("data")).getAbsolutePath,
-      new File(kv("check-data")).getAbsolutePath)
+      new File(kv("work")).getAbsolutePath, new File(kv("data")).getAbsolutePath)
     val r = new Result
     o.workload match {
       case "pipeline" => Pipeline.run(o, r)
       case "catalog_core" => Catalog.run(o, r)
       case w => throw new IllegalArgumentException(s"unknown workload $w")
     }
-    if (!o.trace) r.metrics("peak_mem_mib") = Mem.peakMib()
+    if (!o.trace && !r.metrics.contains("peak_mem_mib")) r.metrics("peak_mem_mib") = Mem.peakMib()
     val wanted = if (o.trace) PerLayer else EndToEnd
     val ms = wanted.map { case (n, u) =>
       s"${Gen.jsonString(n)}:{\"value\":${num(r.metrics.getOrElse(n, 0.0))},\"unit\":${Gen.jsonString(u)}}"
@@ -151,7 +166,11 @@ object Main {
   def num(d: Double): String =
     if (d.isNaN || d.isInfinite) "0" else java.math.BigDecimal.valueOf(d).toPlainString
 
-  def log(msg: String): Unit = System.err.println(s"[graftbench] $msg")
+  private val jvmStartMs = java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
+
+  /** Log line stamped with seconds since the JVM started. */
+  def log(msg: String): Unit =
+    System.err.println(f"[graftbench ${(System.currentTimeMillis() - jvmStartMs) / 1e3}%6.1fs] $msg")
 
   /** Linear-interpolated percentile (numpy's default), `p` in [0, 100]. */
   def pct(xs: Seq[Double], p: Double): Double = {
@@ -188,17 +207,18 @@ object Main {
     */
   def setUp[T](o: Opts, r: Result)(prepare: SparkSession => T): (SparkSession, T) = {
     var last: (SparkSession, T) = null
-    val times = (1 to SetupReps).map { i =>
+    val reps = (1 to SetupReps).map { i =>
       gc()
       val t0 = System.nanoTime()
-      val spark = session(o)
+      val (spark, ds) = secs(session(o))
       val v = prepare(spark)
       val dt = (System.nanoTime() - t0) / 1e9
       if (i < SetupReps) spark.stop() else last = (spark, v)
-      dt
+      (dt, ds)
     }
-    log(f"set-up times ${times.map(t => f"$t%.3f").mkString(" ")}")
-    r.metrics("setup_s") = median(times)
+    log("set-up times (of which session) " +
+      reps.map { case (t, d) => f"$t%.3f ($d%.3f)" }.mkString(" "))
+    r.metrics("setup_s") = median(reps.map(_._1))
     last
   }
 
@@ -333,11 +353,12 @@ object PipelineCommon {
 
 /** `pipeline`: the Kinesis→gzip path, used two ways in one JVM.
   *
-  *   batch  closed-loop `LogPipeline.run` for `--seconds` (throughput, time
-  *          per batch);
   *   stream open-loop `LogStreamJob` for [[Main.StreamMeasuredTriggers]]
-  *          trigger intervals of offered load after two warm-up intervals
-  *          (per-record latency, drain).
+  *          trigger intervals of offered load after a start-up micro-batch
+  *          and [[Main.StreamWarmTriggers]] warm-up intervals
+  *          (per-record latency, drain);
+  *   batch  closed-loop `LogPipeline.run` for `--seconds` and at least
+  *          [[Main.MinBatchOps]] runs (throughput, time per batch).
   */
 object Pipeline {
   import Main._
@@ -347,7 +368,7 @@ object Pipeline {
     val root = s"${o.work}/pipeline"
     val rate = StreamShards * 1000
     val perFile = rate * StreamTickMs / 1000
-    val nFiles = (StreamWarmupMs + StreamMeasuredTriggers * StreamTriggerMs) / StreamTickMs
+    val nFiles = StreamStartFiles + (StreamWarmTriggers + StreamMeasuredTriggers) * StreamIntervalFiles
     val ms = (i: Int) => i * 1000.0 / rate
     val (spark, (in, stream)) = setUp(o, r) { spark =>
       rmrf(root)
@@ -365,17 +386,17 @@ object Pipeline {
     }
     log(s"composition: ${in.comp.copy(prefixes = Map.empty)} prefixes=${in.comp.prefixes.size}")
 
-    // checked warm-up run outside the timed region
-    PipelineBatch.loop(spark, o, r, in, root, 0, None)
-    // batch first: its runs bring the JIT close to steady state, so the
-    // stream's micro-batches stay well inside the trigger interval
+    // checked warm-up runs outside the timed region
+    PipelineBatch.loop(spark, o, r, in, root, 0, None, WarmBatchOps)
     if (!o.trace) {
       Mem.start()
-      val times = PipelineBatch.loop(spark, o, r, in, root, o.seconds.toDouble, None, MinBatchOps)
+      // the stream first: its micro-batches run the same decode, parse and
+      // write code, so the timed batch runs after it start from a warm JIT
       val plain = PipelineStream.once(spark, r, stream, s"$root/stream", rate, perFile, nFiles, None)
-      r.metrics("rec_per_s") = BatchRecords / median(times)
-      r.metrics("mib_per_s") = in.bytes / (1 << 20).toDouble / median(times)
-      r.metrics("wall_s") = median(times)
+      val times = PipelineBatch.loop(spark, o, r, in, root, o.seconds.toDouble, None, MinBatchOps)
+      r.metrics("rec_per_s") = BatchRecords / times.min
+      r.metrics("mib_per_s") = in.bytes / (1 << 20).toDouble / times.min
+      r.metrics("wall_s") = times.min
       r.metrics("latency_p50_ms") = median(plain.latMs)
       r.metrics("latency_p99_ms") = pct(plain.latMs, 99)
     } else {
@@ -462,9 +483,9 @@ object PipelineBatch {
     // the runs after the checked one still speed up as the JIT warms,
     // faster than ABBA order can cancel
     loop(spark, o, r, in, root, 0, None, 2)
-    val abba = Seq(true, false, false, true, true, false, false, true)
+    val abba = Seq(true, false, false, true)
     val ops = abba.map(on => on -> loop(spark, o, r, in, root, 0, if (on) Some(t) else None).head)
-    def mean(on: Boolean) = ops.collect { case (`on`, s) => s }.sum / 4
+    def mean(on: Boolean) = ops.collect { case (`on`, s) => s }.sum / 2
     r.metrics("trace.overhead_pct") = 100 * (mean(true) / mean(false) - 1)
 
     def src = KinesisEventSource.readLambdaEventFile(spark, in.dir)
@@ -528,9 +549,9 @@ object PipelineStream {
 
   final case class Prepared(recs: Array[KRecord], comp: Composition)
 
-  /** One stream run, reduced to what the metrics need. Only records
-    * scheduled after the first [[StreamWarmupMs]] are measured; `batches`
-    * are the micro-batches that hold them. At each of their commits,
+  /** One stream run, reduced to what the metrics need. Only records after
+    * the start files and [[StreamWarmTriggers]] intervals are measured;
+    * `batches` are the micro-batches that hold them. At each of their commits,
     * `backlog` samples the records scheduled but not yet committed and
     * `drainMs` the time since the batch's last scheduled record.
     */
@@ -561,40 +582,55 @@ object PipelineStream {
     spark.streams.addListener(listener)
     val inDir = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     new File(inDir).mkdirs()
+    val start = StreamStartFiles
+    val warm = start + StreamWarmTriggers * StreamIntervalFiles
+    def records(k: Int, created: KRecord => Double) =
+      prep.recs.slice(k * perFile, (k + 1) * perFile).toSeq.map(x => x.copy(createdMs = created(x)))
+    // the start files are in place before the query starts: its first
+    // micro-batch takes them along with the streaming engine's start-up
+    val startAt = System.currentTimeMillis().toDouble
+    (0 until start).foreach { k =>
+      writeLines(f"$inDir/f-$k%06d.json", Gen.lambdaEvents(records(k, _ => startAt), k.toLong * perFile))
+    }
     val query = span("streaming.start") {
       val src = span("sources.stream")(KinesisEventSource.streamLambdaEventDir(spark, inDir))
       LogStreamJob.start(src, cfg, out, ckpt, Trigger.ProcessingTime(StreamTriggerMs))
     }
-    // absolute schedule: record i is created at t0 + i/rate; file k is
-    // written when its last record is due. Processing-time triggers fire on
-    // multiples of the interval. With T a trigger time and t0 half a tick
-    // before it, the files of interval j land at T + j*interval + tick/2,
-    // + 3*tick/2, ..., half a tick clear of both triggers, so the trigger
-    // at T + (j+1)*interval takes exactly the files of interval j: the
-    // warm-up groups first, then one whole group per measured trigger.
+    // Lambda events (input rows) per file
+    val linesPerFile = (perFile + Gen.RecordsPerEvent - 1) / Gen.RecordsPerEvent
+    def await(files: Int, timeoutMs: Long): Unit = {
+      val deadline = System.currentTimeMillis() + timeoutMs
+      while (progress.asScala.map(_.inputRows).sum < files.toLong * linesPerFile &&
+        System.currentTimeMillis() < deadline && query.exception.isEmpty) Thread.sleep(20)
+    }
+    await(start, 60000)
+    // absolute schedule from the next trigger on: record i after the start
+    // files is created at t0 + (i - first)/rate; file k is written when its
+    // last record is due. Processing-time triggers fire on multiples of the
+    // interval. With T a trigger time and t0 half a tick before it, the
+    // files of interval j land at T + j*interval + tick/2, + 3*tick/2, ...,
+    // half a tick clear of both triggers, so the trigger at
+    // T + (j+1)*interval takes exactly the files of interval j.
     val t0 = ((System.currentTimeMillis() + 500) / StreamTriggerMs + 1) * StreamTriggerMs -
       StreamTickMs / 2
-    val files = (0 until nFiles).map { k =>
-      val g = prep.recs.slice(k * perFile, (k + 1) * perFile)
-        .map(x => x.copy(createdMs = t0 + x.createdMs))
-      (Gen.lambdaEvents(g.toSeq, k.toLong * perFile).toVector, t0 + (k + 1).toLong * StreamTickMs)
+    val first = prep.recs(start * perFile).createdMs
+    def created(i: Int): Double = t0 + prep.recs(i).createdMs - first
+    val files = (start until nFiles).map { k =>
+      (Gen.lambdaEvents(records(k, x => t0 + x.createdMs - first), k.toLong * perFile).toVector,
+        t0 + (k - start + 1).toLong * StreamTickMs)
     }
-    val late = new Array[Double](nFiles)
+    val late = new Array[Double](files.size)
     val writer = new Thread(() => {
-      files.zipWithIndex.foreach { case ((lines, due), k) =>
+      files.zipWithIndex.foreach { case ((lines, due), j) =>
         var now = System.currentTimeMillis()
         while (now < due) { Thread.sleep(math.min(due - now, 20L).max(1L)); now = System.currentTimeMillis() }
-        writeLines(f"$inDir/f-$k%06d.json", lines.iterator)
-        late(k) = (System.currentTimeMillis() - due).toDouble
+        writeLines(f"$inDir/f-${start + j}%06d.json", lines.iterator)
+        late(j) = (System.currentTimeMillis() - due).toDouble
       }
     }, "graftbench-generator")
     writer.start()
     writer.join()
-    val totalLines = files.map(_._1.size.toLong).sum
-    val deadline = System.currentTimeMillis() + 60000
-    def committedLines = progress.asScala.map(_.inputRows).sum
-    while (committedLines < totalLines && System.currentTimeMillis() < deadline &&
-      query.exception.isEmpty) Thread.sleep(20)
+    await(nFiles, 30000)
     query.stop()
     spark.streams.removeListener(listener)
     query.exception.foreach(e => r.fail(1, s"stream failed: ${e.getMessage}"))
@@ -604,7 +640,6 @@ object PipelineStream {
     r.attempted += all.size
     val commit = all.map(p => p.batchId -> p.commitMs).toMap
     val fileBatch = sourceLog(s"$ckpt/sources/0")
-    val warmFiles = StreamWarmupMs / StreamTickMs
     val lat = mutable.ArrayBuffer.empty[Double]
     val recsPerBatch = mutable.HashMap.empty[Long, Long].withDefaultValue(0L)
     val lastRecord = mutable.HashMap.empty[Long, Double]
@@ -612,10 +647,10 @@ object PipelineStream {
       fileBatch.get(f"f-$k%06d.json").filter(commit.contains) match {
         case Some(b) =>
           recsPerBatch(b) += perFile
-          if (k >= warmFiles) {
-            lastRecord(b) = lastRecord.getOrElse(b, 0.0) max (t0 + prep.recs((k + 1) * perFile - 1).createdMs)
+          if (k >= warm) {
+            lastRecord(b) = lastRecord.getOrElse(b, 0.0) max created((k + 1) * perFile - 1)
             val c = commit(b); var i = k * perFile
-            while (i < (k + 1) * perFile) { lat += c - (t0 + prep.recs(i).createdMs); i += 1 }
+            while (i < (k + 1) * perFile) { lat += c - created(i); i += 1 }
           }
           true
         case None => false
@@ -627,10 +662,12 @@ object PipelineStream {
     val lastCommit = fileBatch.get(f"f-${nFiles - 1}%06d.json").flatMap(commit.get)
       .getOrElse(System.currentTimeMillis()).toDouble
     // records scheduled but not yet committed, sampled at each commit
+    val startRecs = start * perFile
     var done = 0L
     val backlog = all.map { p =>
       done += recsPerBatch(p.batchId)
-      p.batchId -> (((p.commitMs - t0) * rate / 1000.0).max(0).min(prep.recs.length.toDouble) - done)
+      p.batchId -> (startRecs + ((p.commitMs - t0) * rate / 1000.0).max(0)
+        .min((prep.recs.length - startRecs).toDouble) - done)
     }.toMap
     val measured = all.filter(p => lastRecord.contains(p.batchId))
     val s = Stats(lat.toSeq, measured, recsPerBatch.toMap, late.toSeq,
@@ -680,8 +717,9 @@ object PipelineStream {
 // ---------------------------------------------------------------------------
 
 /** `catalog_core`: the 13 fixed catalog queries, each built and executed
-  * into a noop sink; a checked pass (parquet outputs, compared against the
-  * DuckDB oracle by the runner) runs first and doubles as warm-up.
+  * into a noop sink; a checked pass over the same corpus (parquet outputs,
+  * compared against the DuckDB oracle by the runner) runs first and
+  * doubles as warm-up.
   */
 object Catalog {
   import Main._
@@ -707,8 +745,8 @@ object Catalog {
       }.toMap
     }
 
-    // checked pass on the small corpus (parquet outputs + oracle SQL for
-    // the runner); it also warms codegen and the JIT for the timed pass
+    // checked pass (parquet outputs + oracle SQL for the runner); it also
+    // warms codegen and the JIT for the timed pass
     new File(root).mkdirs()
     // the untimed pass runs its queries on parallel threads: most of its
     // cost is per-query compilation, which then overlaps
@@ -720,7 +758,7 @@ object Catalog {
         pool.submit(new Runnable {
           def run(): Unit =
             try {
-              val (_, dt) = secs(q.build(spark, o.checkData).write.mode("overwrite")
+              val (_, dt) = secs(q.build(spark, o.data).write.mode("overwrite")
                 .parquet(s"$root/check/${q.name}"))
               log(f"checked ${q.name} ${dt}%.1fs")
             }
@@ -730,15 +768,17 @@ object Catalog {
     }
     pool.shutdown()
     graft.ops.Caches.drainAll(spark)
+    gc()
     log(f"checked pass ${checkS}%.1fs")
     val oracle = (qs.flatMap(q => q.oracle.map(q.name -> _)) ++
       byName("q191_margin_mining").oracle.map("q191_margin_mining" -> _))
       .map { case (k, v) => s"${Gen.jsonString(k)}:${Gen.jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$root/oracle_sql.json"), oracle)
 
+    /** One timed execution. Caches are drained and the heap collected after
+      * it, so the next one starts clean.
+      */
     def once(q: Queries.Q, t: Option[(Trace, EngineListener)]): Double = {
-      graft.ops.Caches.drainAll(spark)
-      gc()
       val (_, dt) = secs {
         t match {
           case None =>
@@ -751,6 +791,8 @@ object Catalog {
             }
         }
       }
+      graft.ops.Caches.drainAll(spark)
+      gc()
       dt
     }
 
@@ -761,12 +803,19 @@ object Catalog {
     }
 
     if (!o.trace) {
+      // memory per query execution, each lap closed by the collection after
+      // it: a median over executions, as the peak of the whole pass is the
+      // one collection that happened to catch the most in-flight data
       Mem.start()
+      val laps = mutable.ArrayBuffer.empty[Double]
       val samples = mutable.LinkedHashMap(qs.map(_.name -> mutable.ArrayBuffer.empty[Double]): _*)
       val start = System.nanoTime()
       var passes = 0
       while (passes == 0 || (System.nanoTime() - start) / 1e9 < o.seconds) {
-        qs.foreach(q => samples(q.name) ++= attempt(q)(once(q, None)))
+        qs.foreach { q =>
+          samples(q.name) ++= attempt(q)(once(q, None))
+          laps += Mem.lap()
+        }
         passes += 1
       }
       val per = samples.map { case (k, v) => k -> median(v.toSeq) }
@@ -779,6 +828,8 @@ object Catalog {
       r.metrics("mib_per_s") = bytes / (1 << 20) / wall
       r.metrics("latency_p50_ms") = median(per.values.toSeq) * 1e3
       r.metrics("latency_p99_ms") = pct(per.values.toSeq, 99) * 1e3
+      r.metrics("peak_mem_mib") = median(laps.toSeq)
+      log(f"memory per query MiB: median ${median(laps.toSeq)}%.1f max ${laps.max}%.1f")
     } else {
       // each query untraced and traced, alternating which goes first, so
       // the overhead estimate carries no warm-up bias

@@ -54,6 +54,21 @@ object Mem {
     on = true
   }
 
+  /** Peak since [[start]] or the last lap, in MiB, and a new lap from now
+    * on. Call it right after a collection, so the heap figure includes what
+    * the lap left live.
+    */
+  def lap(): Double = {
+    val nonHeap = nonHeapPools.map(_.getPeakUsage.getUsed).sum
+    val (heap, buf) = synchronized {
+      val v = (peakHeap, peakBuffers max bufferBytes)
+      peakHeap = 0L; peakBuffers = bufferBytes
+      v
+    }
+    nonHeapPools.foreach(_.resetPeakUsage())
+    (heap + nonHeap + buf).toDouble / (1 << 20)
+  }
+
   /** Peak since [[start]], in MiB. Collects once more first, so a run with
     * no collection of its own still has a heap figure.
     */
