@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.functions.{HeavyHitters, KplDeaggregate, LenientTimestamp,
-  NgramJaccard, NormalizeText, PiiCount, QuantizedDot, RedactPii,
-  ShingleHashes, SimHash64, TopKByScore, TryGunzip, VecCosine}
+import graft.functions.gfn
 
 /** SparkSessionExtensions hook: makes the engine's custom expressions
   * available to plain `spark.sql(...)` users via
@@ -18,78 +18,76 @@ import graft.functions.{HeavyHitters, KplDeaggregate, LenientTimestamp,
   * style deployments, and survives session cloning.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  import GraftExtensions._
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, "", name, usage, "", "", "", "", "", "", "built-in")
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("try_gunzip"),
-      info("try_gunzip", "try_gunzip(bin) - inflate gzip values, pass through others"),
-      (es: Seq[Expression]) => TryGunzip(es.head)))
-    e.injectFunction((FunctionIdentifier("lenient_ts"),
-      info("lenient_ts", "lenient_ts(str[, zone]) - dateutil-grade timestamp parse"),
-      (es: Seq[Expression]) => es match {
-        case Seq(c) => LenientTimestamp(c, "UTC")
-        case Seq(c, z) => LenientTimestamp(c,
-          z.eval().asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString)
-        case _ => throw new IllegalArgumentException("lenient_ts takes 1 or 2 args")
-      }))
-    e.injectFunction((FunctionIdentifier("kpl_deaggregate"),
-      info("kpl_deaggregate", "kpl_deaggregate(bin) - explode KPL aggregate records"),
-      (es: Seq[Expression]) => KplDeaggregate(es.head)))
-
-    // text-analysis / near-dup kernels — the parameterized ones take their
-    // static knob (shingle width) as a foldable int argument
-    def intLit(e: Expression, name: String): Int = e.eval() match {
-      case i: Int => i
-      case other => throw new IllegalArgumentException(
-        s"$name expects a literal int, got $other")
+  override def apply(e: SparkSessionExtensions): Unit =
+    for (SqlFunction(name, usage, build) <- functions) {
+      val info = new ExpressionInfo(classOf[GraftExtensions].getName, "", name, usage,
+        "", "", "", "", "", "", "built-in")
+      e.injectFunction((FunctionIdentifier(name), info, (es: Seq[Expression]) =>
+        build.lift(es.map(ColumnBridge.column)) match {
+          // the analyzer wraps a bare AggregateFunction itself (and applies
+          // DISTINCT/FILTER), so hand it the function, not gfn's wrapper
+          case Some(c) => ColumnBridge.expression(c) match {
+            case agg: AggregateExpression => agg.aggregateFunction
+            case other => other
+          }
+          case None => throw new IllegalArgumentException(
+            s"$name does not take ${es.size} argument(s); usage: $usage")
+        }))
     }
-    e.injectFunction((FunctionIdentifier("ngram_jaccard"),
-      info("ngram_jaccard", "ngram_jaccard(a, b[, w]) - exact w-token-shingle Jaccard of two texts"),
-      (es: Seq[Expression]) => es match {
-        case Seq(a, b) => NgramJaccard(a, b, 3)
-        case Seq(a, b, w) => NgramJaccard(a, b, intLit(w, "ngram_jaccard"))
-        case _ => throw new IllegalArgumentException("ngram_jaccard takes 2 or 3 args")
-      }))
-    e.injectFunction((FunctionIdentifier("shingle_hashes"),
-      info("shingle_hashes", "shingle_hashes(text[, w]) - distinct 31-bit hashed w-token shingles"),
-      (es: Seq[Expression]) => es match {
-        case Seq(t) => ShingleHashes(t, 3)
-        case Seq(t, w) => ShingleHashes(t, intLit(w, "shingle_hashes"))
-        case _ => throw new IllegalArgumentException("shingle_hashes takes 1 or 2 args")
-      }))
-    e.injectFunction((FunctionIdentifier("normalize_text"),
-      info("normalize_text", "normalize_text(text) - NFC + control-strip + whitespace-collapse + trim"),
-      (es: Seq[Expression]) => NormalizeText(es.head)))
-    e.injectFunction((FunctionIdentifier("redact_pii"),
-      info("redact_pii", "redact_pii(text) - emails/IPv4/phones -> <EMAIL>/<IP>/<PHONE>"),
-      (es: Seq[Expression]) => RedactPii(es.head)))
-    e.injectFunction((FunctionIdentifier("pii_count"),
-      info("pii_count", "pii_count(text) - number of PII matches redact_pii would replace"),
-      (es: Seq[Expression]) => PiiCount(es.head)))
-    e.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(text) - 64-bit SimHash over whitespace tokens"),
-      (es: Seq[Expression]) => SimHash64(es.head)))
-    // custom aggregates: the analyzer wraps a bare AggregateFunction in its
-    // AggregateExpression, so returning the function itself is enough
-    e.injectFunction((FunctionIdentifier("heavy_hitters"),
-      info("heavy_hitters", "heavy_hitters(term, m) - SpaceSaving m-counter frequent-items summary"),
-      (es: Seq[Expression]) => es match {
-        case Seq(t, m) => HeavyHitters(t, intLit(m, "heavy_hitters"))
-        case _ => throw new IllegalArgumentException("heavy_hitters takes (term, m)")
-      }))
-    e.injectFunction((FunctionIdentifier("topk_by_score"),
-      info("topk_by_score", "topk_by_score(score, id, k) - bounded per-group top-k (partial-agg)"),
-      (es: Seq[Expression]) => es match {
-        case Seq(s, i, k) => TopKByScore(s, i, intLit(k, "topk_by_score"))
-        case _ => throw new IllegalArgumentException("topk_by_score takes (score, id, k)")
-      }))
-    e.injectFunction((FunctionIdentifier("vec_cosine"),
-      info("vec_cosine", "vec_cosine(a, b) - cosine similarity of two float arrays"),
-      (es: Seq[Expression]) => VecCosine(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("quantized_dot"),
-      info("quantized_dot", "quantized_dot(a, b) - integer-quantized (x1000) dot product"),
-      (es: Seq[Expression]) => QuantizedDot(es.head, es(1))))
+}
+
+object GraftExtensions {
+  /** One SQL function: its name, its usage line, and a builder over the
+    * argument list (one case per accepted arity) calling the same `gfn`
+    * function as the Column API.
+    */
+  private case class SqlFunction(name: String, usage: String,
+                                 build: PartialFunction[Seq[Column], Column])
+
+  /** The static knobs (shingle width, counter count, k) must be foldable ints. */
+  private def intLit(c: Column, name: String): Int = ColumnBridge.expression(c).eval() match {
+    case i: Int => i
+    case other => throw new IllegalArgumentException(s"$name expects a literal int, got $other")
   }
+
+  private val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("try_gunzip", "try_gunzip(bin) - inflate gzip values, pass through others",
+      { case Seq(b) => gfn.try_gunzip(b) }),
+    SqlFunction("lenient_ts", "lenient_ts(str[, zone]) - dateutil-grade timestamp parse", {
+      case Seq(t) => gfn.lenient_ts(t)
+      case Seq(t, z) => gfn.lenient_ts(t, ColumnBridge.expression(z).eval().toString)
+    }),
+    SqlFunction("kpl_deaggregate", "kpl_deaggregate(bin) - explode KPL aggregate records",
+      { case Seq(b) => gfn.kpl_deaggregate(b) }),
+    SqlFunction("ngram_jaccard",
+      "ngram_jaccard(a, b[, w]) - exact w-token-shingle Jaccard of two texts", {
+        case Seq(a, b) => gfn.ngram_jaccard(a, b)
+        case Seq(a, b, w) => gfn.ngram_jaccard(a, b, intLit(w, "ngram_jaccard"))
+      }),
+    SqlFunction("shingle_hashes",
+      "shingle_hashes(text[, w]) - distinct 31-bit hashed w-token shingles", {
+        case Seq(t) => gfn.shingle_hashes(t)
+        case Seq(t, w) => gfn.shingle_hashes(t, intLit(w, "shingle_hashes"))
+      }),
+    SqlFunction("normalize_text",
+      "normalize_text(text) - NFC + control-strip + whitespace-collapse + trim",
+      { case Seq(t) => gfn.normalize_text(t) }),
+    SqlFunction("redact_pii", "redact_pii(text) - emails/IPv4/phones -> <EMAIL>/<IP>/<PHONE>",
+      { case Seq(t) => gfn.redact_pii(t) }),
+    SqlFunction("pii_count", "pii_count(text) - number of PII matches redact_pii would replace",
+      { case Seq(t) => gfn.pii_count(t) }),
+    SqlFunction("simhash64", "simhash64(text) - 64-bit SimHash over whitespace tokens",
+      { case Seq(t) => gfn.simhash64(t) }),
+    SqlFunction("heavy_hitters",
+      "heavy_hitters(term, m) - SpaceSaving m-counter frequent-items summary",
+      { case Seq(t, m) => gfn.heavy_hitters(t, intLit(m, "heavy_hitters")) }),
+    SqlFunction("topk_by_score",
+      "topk_by_score(score, id, k) - bounded per-group top-k (partial-agg)",
+      { case Seq(s, i, k) => gfn.topk_by_score(s, i, intLit(k, "topk_by_score")) }),
+    SqlFunction("vec_cosine", "vec_cosine(a, b) - cosine similarity of two float arrays",
+      { case Seq(a, b) => gfn.vec_cosine(a, b) }),
+    SqlFunction("quantized_dot", "quantized_dot(a, b) - integer-quantized (x1000) dot product",
+      { case Seq(a, b) => gfn.quantized_dot(a, b) }))
 }

@@ -280,7 +280,7 @@ object Queries {
       ORDER BY event_id"""))
 
   /** O9: lenient multi-format timestamp parsing — strings in three formats
-    * (ISO-Z / SQL-local / RFC2822) are parsed by the custom LenientTimestamp
+    * (ISO-Z / SQL-local / RFC2822) are parsed by the custom lenient_ts (LenientTs)
     * expression; the oracle checks against the original event time truncated
     * to seconds (the formats carry no sub-second part).
     */
@@ -980,7 +980,7 @@ object Queries {
                         / 2000.0) AS BIGINT) AS shard_id
       FROM documents ORDER BY doc_id"""))
 
-  /** Text NORMALIZATION (native NormalizeText kernel): NFC + control-strip +
+  /** Text NORMALIZATION (native normalize_text kernel): NFC + control-strip +
     * whitespace-collapse + trim — the canonicalization pass run before any
     * hashing/dedup so byte-level noise doesn't defeat content identity. The
     * oracle re-derives the exact pipeline with nfc_normalize + RE2 regexes
@@ -1001,7 +1001,7 @@ object Queries {
                   '[\t\n\f\r ]+', ' ', 'g'), ' ') <> text AS INT) AS changed
       FROM documents ORDER BY doc_id"""))
 
-  /** PII REDACTION (native RedactPii/PiiCount kernels): emails, IPv4
+  /** PII REDACTION (native redact_pii/pii_count kernels): emails, IPv4
     * literals, and phone-shaped numbers → typed placeholders — the privacy
     * scrub pass of a curation pipeline. The synthetic docs carry no PII, so
     * both engines append the same doc_id-derived email/IP/phone suffix
@@ -4603,7 +4603,7 @@ object Queries {
     * the zlib-entropy heuristic for training-data curation: boilerplate and
     * within-doc repetition compress far below fluent prose (they pair with
     * q40/q134's explicit repetition counts), while encoded noise sits near
-    * 1.0. One codegen'd scalar per row ([[graft.functions.DeflateLen]]),
+    * 1.0. One codegen'd scalar per row ([[graft.functions.GzipUtil.deflateLen]]),
     * fully narrow — the 100 TB cost is the scan plus per-byte deflate CPU.
     * Rows-only: DuckDB has no per-value deflate; values are pinned by the
     * OpsSpec planted-ordering and determinism tests.
@@ -6439,7 +6439,7 @@ object Queries {
 
   /** ROUGE-L (Eval.rougeL): LCS precision/recall/F over the q179 pairing —
     * the order-sensitive generation-overlap metric. The LCS is the
-    * codegen'd LcsTokens kernel (two-row DP, capped at 512 tokens/side);
+    * codegen'd lcs_tokens kernel (two-row DP, capped at 512 tokens/side);
     * no SQL engine exposes LCS, so this is rows-only with a plain-Scala
     * DP replay pinned in OpsSpec (the q113 BPE precedent).
     */
@@ -7550,7 +7550,7 @@ object Queries {
                AS threshold
       FROM r GROUP BY grp ORDER BY grp"""))
 
-  /** LUHN PAYMENT-CARD SCAN (functions/LuhnCount): checksum-VALIDATED
+  /** LUHN PAYMENT-CARD SCAN (TextKernel.luhnCount): checksum-VALIDATED
     * card-shaped digit runs per document — the PII detector the q-series
     * regexes can't express (a 16-digit run is only card-shaped when its
     * ISO 7812 check digit validates). Each doc carries a deterministic

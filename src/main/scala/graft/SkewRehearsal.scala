@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * rehearsal the r11 verdict asked for (its item 5). Question under test:
   * when the unigram/bigram model tables are too big to broadcast (the
   * 100 TB regime), the stupid-backoff scoring joins key on xxhash64 of
-  * grams (`h2`/`h3` in TrigramHashKeys) — do Zipf-hot function words give
+  * grams (`h2`/`h3` in trigram_hash_keys) — do Zipf-hot function words give
   * one hash partition so much mass that the join stage degenerates?
   *
   * Setup: a 10× corpus of disjoint per-replica token namespaces (the

@@ -1,88 +1,37 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the three operations Spark lacks
-  * (SURVEY.md §7.2): per-value gzip inflate (O4), dateutil-grade lenient
-  * timestamp parsing (O9), and KPL aggregate-record deaggregation (O3).
-  * All are codegen'd (doGenCode via nullSafeCodeGen calling static JVM
-  * helpers) so they stay inside whole-stage codegen spans; KplDeaggregate
-  * is a Generator (planned by GenerateExec, like explode).
+/** Catalyst surface of the JVM kernels. Spark lacks three operations the
+  * pipeline needs (SURVEY.md §7.2) — per-value gzip inflate (O4),
+  * dateutil-grade lenient timestamp parsing (O9) and KPL deaggregation
+  * (O3) — and the training-data catalog adds the text/vector kernels.
+  *
+  * Every scalar kernel is a static method on a kernel object (TextKernel,
+  * VecKernel, MinHashKernel, GzipUtil, LenientTs, BpeKernel, AcKernel), and
+  * `gfn` calls it through Spark's own StaticInvoke: whole-stage code makes a
+  * direct `graft.functions.<Kernel>.<method>(...)` call, the interpreted
+  * path (HOF lambdas, NO_CODEGEN) one reflective call. Scalar knobs ride as
+  * Literals; arrays and compiled state (centroids, planes, BPE ranks, the
+  * Aho–Corasick automaton) as ObjectType literals built once in `gfn`. A
+  * null input gives a null result; only `try_gunzip` and `lenient_ts` can
+  * also return null themselves.
+  *
+  * The classes below are the exceptions, each doing more than forwarding.
   */
 
-/** O4: sniff gzip magic bytes, inflate when present, pass through otherwise;
-  * null on corrupt stream. Ref behavior: /root/reference/README.md:10.
-  */
-case class TryGunzip(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "try_gunzip"
-
-  override def nullSafeEval(v: Any): Any = GzipUtil.maybeGunzip(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.GzipUtil.maybeGunzip($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): TryGunzip = copy(newChild)
-}
-
-/** DEFLATE-compressed byte length of a string (zlib level 6, raw stream) —
-  * the compression-ratio quality signal's kernel: ratio =
-  * deflate_len / octet_length. Codegen'd scalar; see GzipUtil.deflateLen.
-  */
-case class DeflateLen(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "deflate_len"
-
-  override def nullSafeEval(v: Any): Any =
-    GzipUtil.deflateLen(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GzipUtil.deflateLen($c.getBytes());")
-
-  override protected def withNewChildInternal(newChild: Expression): DeflateLen =
-    copy(newChild)
-}
-
-/** O9: lenient multi-format timestamp parse → TimestampType (micros), null
-  * when unparseable. Zone applies to zone-less formats.
-  * Ref: /root/reference/README.md:15 (dateutil.parser.parse leniency).
-  */
-case class LenientTimestamp(child: Expression, zoneId: String) extends UnaryExpression {
-  override def dataType: DataType = TimestampType
-  override def nullable: Boolean = true
-  override def prettyName: String = "lenient_ts"
-
-  override def nullSafeEval(v: Any): Any = LenientTs.parseMicros(v.toString, zoneId)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("parsed")
-      // zoneId goes in as a reference object, never spliced into source —
-      // a quote/backslash in a user-supplied TZ must not break codegen
-      val z = ctx.addReferenceObj("lenientTsZone", zoneId, "java.lang.String")
-      s"""
-      java.lang.Long $r = graft.functions.LenientTs.parseMicros($c.toString(), $z);
-      if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
-      """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): LenientTimestamp =
-    copy(child = newChild)
-}
-
-/** O3: KPL aggregate record → 0..N user payloads (Generator, like explode).
-  * Non-aggregate input yields itself. Ref: /root/reference/lambda/requirements.txt:4.
+/** O3: KPL aggregate record → 0..N user payloads. A Generator (planned by
+  * GenerateExec, like explode), which StaticInvoke cannot be. Non-aggregate
+  * input yields itself.
   */
 case class KplDeaggregate(child: Expression) extends UnaryExpression
     with Generator with CodegenFallback {
@@ -99,1023 +48,241 @@ case class KplDeaggregate(child: Expression) extends UnaryExpression
     copy(newChild)
 }
 
-/** Native hashed-shingle extraction: text → distinct 31-bit (minhash-safe)
-  * or 64-bit (set-exact counting) hashes of w-token windows, no intermediate
-  * strings (see MinHashKernel). The HOF composition
-  * (split→transform→concat_ws→xxhash→distinct) evaluates interpreted per
-  * element; this runs as one primitive-array loop.
+/** Integer lattice quantization of a numeric array (VecKernel.quantizeLattice,
+  * or quantizeLatticeI into array<int> when `toInt`): round(x*scale)+shift
+  * per element, bit-identical to the transform+round dag it replaces. A
+  * class because the kernel's element-type code comes from the RESOLVED
+  * child type (the dag's cast(x as double) accepted any numeric element),
+  * which `gfn` cannot see; the optimizer then swaps in the StaticInvoke.
   */
-case class ShingleHashes(child: Expression, w: Int, fold31: Boolean = true)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = if (fold31) "shingle_hashes" else "shingle_hashes64"
+case class QuantizeLattice(child: Expression, scale: Long, shift: Long, toInt: Boolean)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
+  override def prettyName: String = if (toInt) "quantize_lattice_i" else "quantize_lattice"
+  override def dataType: DataType = gfn.arr(if (toInt) IntegerType else LongType)
 
-  override def nullSafeEval(v: Any): Any =
-    MinHashKernel.shingleHashes(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], w, fold31)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinHashKernel.shingleHashes($c, $w, $fold31);")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
-    copy(child = newChild)
-}
-
-/** Native k-permutation MinHash signature over a hash array. */
-case class MinHashSig(child: Expression, a: Array[Long], b: Array[Long])
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-
-  override def nullSafeEval(v: Any): Any =
-    MinHashKernel.signature(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], a, b)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("mhA", a, "long[]")
-    val bRef = ctx.addReferenceObj("mhB", b, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinHashKernel.signature($c, $aRef, $bRef);")
+  private def elemCode: Option[Int] = child.dataType match {
+    case ArrayType(FloatType, _) => Some(0)
+    case ArrayType(DoubleType, _) => Some(1)
+    case ArrayType(IntegerType, _) => Some(2)
+    case ArrayType(LongType, _) => Some(3)
+    case _ => None
   }
 
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-/** Native cosine similarity over two array<float> columns. */
-case class VecCosine(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "vec_cosine"
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    VecKernel.cosineF(l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) =>
-      s"${ev.value} = graft.functions.VecKernel.cosineF($l, $r);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): VecCosine =
-    copy(left = l, right = r)
-}
-
-/** Native exact w-shingle Jaccard over two string columns (string-set
-  * semantics — bit-identical to the HOF composition, one JVM pass).
-  */
-case class NgramJaccard(left: Expression, right: Expression, w: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "ngram_jaccard"
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    MinHashKernel.ngramJaccard(l.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      r.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) =>
-      s"${ev.value} = graft.functions.MinHashKernel.ngramJaccard($l, $r, $w);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): NgramJaccard =
-    copy(left = l, right = r)
-}
-
-/** Native integer-quantized dot product over two array<float> columns. */
-case class QuantizedDot(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "quantized_dot"
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    VecKernel.quantizedDot(l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) =>
-      s"${ev.value} = graft.functions.VecKernel.quantizedDot($l, $r);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): QuantizedDot =
-    copy(left = l, right = r)
-}
-
-/** Token-LCS length between two array<string> columns (the ROUGE-L core),
-  * capped at `cap` tokens per side (TextKernel.lcsLen's scale contract).
-  */
-case class LcsTokens(left: Expression, right: Expression, cap: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "lcs_tokens"
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    TextKernel.lcsLen(l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], cap)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) =>
-      s"${ev.value} = graft.functions.TextKernel.lcsLen($l, $r, $cap);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): LcsTokens =
-    copy(left = l, right = r)
-}
-
-/** Token-level Levenshtein distance, capped — the WER numerator (see
-  * TextKernel.editDist for the DP/truncation contract).
-  */
-case class EditTokens(left: Expression, right: Expression, cap: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "edit_tokens"
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    TextKernel.editDist(l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], cap)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) =>
-      s"${ev.value} = graft.functions.TextKernel.editDist($l, $r, $cap);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): EditTokens =
-    copy(left = l, right = r)
-}
-
-/** Luhn-validated payment-card-shaped digit-run count per string — the
-  * checksum-gated PII detector (TextKernel.luhnCount).
-  */
-/** Multiset w-token window hashes (TextKernel.gramHashMultiset) — the
-  * native gram pass behind soft-dedup: no gram strings, duplicates kept.
-  */
-case class GramHashMultiset(child: Expression, w: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "gram_hash_multiset"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.gramHashMultiset(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.gramHashMultiset($c, $w);")
-
-  override protected def withNewChildInternal(c: Expression): GramHashMultiset =
-    copy(child = c)
-}
-
-/** Polynomial 31-bit rolling code-point hash (TextKernel.rollHash31) —
-  * the native form of TextOps.rollHash's aggregate/transform dag; also
-  * evaluated per element inside HOF lambdas (one JVM call per token vs a
-  * nested interpreted fold per character).
-  */
-case class RollHash31(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "roll_hash31"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.rollHash31(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.rollHash31($c);")
-
-  override protected def withNewChildInternal(c: Expression): RollHash31 =
-    copy(child = c)
-}
-
-/** Positional code-point checksum bucket (TextKernel.asciiWeightedMod):
-  * the native form of the q139 feature-hash dag — one loop per token vs an
-  * interpreted per-character zip_with/aggregate chain.
-  */
-case class AsciiWeightedMod(child: Expression, m: Long) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "ascii_weighted_mod"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.asciiWeightedMod(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], m)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.asciiWeightedMod($c, ${m}L);")
-
-  override protected def withNewChildInternal(c: Expression): AsciiWeightedMod =
-    copy(child = c)
-}
-
-/** Per-(doc, n) gram-repetition stats array (TextKernel.gramRepStats) — the
-  * one-pass native form of TextOps.gramRepetition's sorted-gram-array RLE.
-  */
-case class GramRepStats(child: Expression, minN: Int, maxN: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("n", IntegerType, nullable = false),
-    StructField("n_types", LongType, nullable = false),
-    StructField("n_grams", LongType, nullable = false),
-    StructField("top_m", LongType, nullable = false),
-    StructField("top_chars", LongType, nullable = false),
-    StructField("dup_chars", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "gram_rep_stats"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.gramRepStats(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], minN, maxN)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.gramRepStats($c, $minN, $maxN);")
-
-  override protected def withNewChildInternal(c: Expression): GramRepStats =
-    copy(child = c)
-}
-
-/** Space-split tokens, empties dropped (TextKernel.tokens) — the native
-  * arrToks: one byte pass, tokens wrap the text bytes; replaces the
-  * interpreted ArrayFilter lambda at every tokenizer site.
-  */
-case class Tokens(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "tokens"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.tokens(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.tokens($c);")
-
-  override protected def withNewChildInternal(c: Expression): Tokens =
-    copy(child = c)
-}
-
-/** Adjacent-bigram structs (TextKernel.bigramStructs) — the native
-  * bigramStructs(arrToks(text)) dag (train-side gram tables, PMI).
-  */
-case class BigramStructs(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("w1", StringType, nullable = false),
-    StructField("w2", StringType, nullable = false))), containsNull = false)
-  override def prettyName: String = "bigram_structs"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.bigramStructs(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.bigramStructs($c);")
-
-  override protected def withNewChildInternal(c: Expression): BigramStructs =
-    copy(child = c)
-}
-
-/** Adjacent-trigram structs (TextKernel.trigramStructs). */
-case class TrigramStructs(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("w1", StringType, nullable = false),
-    StructField("w2", StringType, nullable = false),
-    StructField("w3", StringType, nullable = false))), containsNull = false)
-  override def prettyName: String = "trigram_structs"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.trigramStructs(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.trigramStructs($c);")
-
-  override protected def withNewChildInternal(c: Expression): TrigramStructs =
-    copy(child = c)
-}
-
-/** Ordered skip-gram pairs within `window` (TextKernel.skipgramPairs) —
-  * the native form of skipgramCounts' doubly-nested transform.
-  */
-case class SkipgramPairs(child: Expression, window: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("w1", StringType, nullable = false),
-    StructField("w2", StringType, nullable = false))), containsNull = false)
-  override def prettyName: String = "skipgram_pairs"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.skipgramPairs(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], window)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.skipgramPairs($c, $window);")
-
-  override protected def withNewChildInternal(c: Expression): SkipgramPairs =
-    copy(child = c)
-}
-
-/** Per adjacent bigram, the xxhash64 join keys (h12, h1, h2) the LM
-  * scoring dags need (TextKernel.bigramHashKeys) — one byte pass over the
-  * text, no token array, no gram-struct strings, no per-key string
-  * re-hash; bit-identical to explode(bigramStructs)+xxhash64 (OpsSpec).
-  */
-case class BigramHashKeys(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("h12", LongType, nullable = false),
-    StructField("h1", LongType, nullable = false),
-    StructField("h2", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "bigram_hash_keys"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.bigramHashKeys(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.bigramHashKeys($c);")
-
-  override protected def withNewChildInternal(c: Expression): BigramHashKeys =
-    copy(child = c)
-}
-
-/** Per adjacent trigram, the xxhash64 join keys (h123, h12, h23, h2, h3)
-  * Stupid Backoff scoring needs (TextKernel.trigramHashKeys) — same
-  * one-pass contract as [[BigramHashKeys]].
-  */
-case class TrigramHashKeys(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("h123", LongType, nullable = false),
-    StructField("h12", LongType, nullable = false),
-    StructField("h23", LongType, nullable = false),
-    StructField("h2", LongType, nullable = false),
-    StructField("h3", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "trigram_hash_keys"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.trigramHashKeys(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.trigramHashKeys($c);")
-
-  override protected def withNewChildInternal(c: Expression): TrigramHashKeys =
-    copy(child = c)
-}
-
-/** xxhash64 sigs of a string + its single-deletion variants
-  * (TextKernel.del1Sigs) — the d=1 deletion neighborhood of
-  * FuzzyJoin.editDistancePairs, one native pass.
-  */
-case class Del1Sigs(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "del1_sigs"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.del1Sigs(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.del1Sigs($c);")
-
-  override protected def withNewChildInternal(c: Expression): Del1Sigs =
-    copy(child = c)
-}
-
-case class LuhnCount(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "luhn_count"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.luhnCount(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.luhnCount($c);")
-
-  override protected def withNewChildInternal(c: Expression): LuhnCount =
-    copy(child = c)
-}
-
-/** Per-order clipped char n-gram stats (m, ct, rt) for n = 1..maxN between
-  * two string columns — the chrF core, row-local (TextKernel.clippedGrams);
-  * orders beyond both lengths are absent from the array.
-  */
-case class ClippedGrams(left: Expression, right: Expression, maxN: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("m", LongType, nullable = false),
-    StructField("ct", LongType, nullable = false),
-    StructField("rt", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "clipped_grams"
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    TextKernel.clippedGrams(
-      l.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      r.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], maxN)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) =>
-      s"${ev.value} = graft.functions.TextKernel.clippedGrams($l, $r, $maxN);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ClippedGrams =
-    copy(left = l, right = r)
-}
-
-/** Integer lattice quantization of an array<float> column
-  * (VecKernel.quantizeLattice): round(x*scale)+shift per element,
-  * bit-identical to the transform+round dag it replaces.
-  */
-case class QuantizeLattice(child: Expression, scale: Long, shift: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "quantize_lattice"
-
-  // element-type code for the kernel read (the dag's cast(x as double)
-  // accepted any numeric element)
-  private def et: Int = child.dataType match {
-    case ArrayType(FloatType, _) => 0
-    case ArrayType(DoubleType, _) => 1
-    case ArrayType(IntegerType, _) => 2
-    case ArrayType(LongType, _) => 3
-    case t => throw new IllegalArgumentException(s"quantize_lattice: $t")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    VecKernel.quantizeLattice(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], scale, shift, et)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VecKernel.quantizeLattice($c, ${scale}L, ${shift}L, $et);")
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (elemCode.isDefined) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName takes a numeric array, got ${child.dataType}")
+
+  override lazy val replacement: Expression =
+    gfn.call(VecKernel, if (toInt) "quantizeLatticeI" else "quantizeLattice", dataType,
+      Seq(child, Literal(scale), Literal(shift), Literal(elemCode.get)))
 
   override protected def withNewChildInternal(c: Expression): QuantizeLattice =
     copy(child = c)
 }
 
-/** [[QuantizeLattice]] into array<int> (VecKernel.quantizeLatticeI). */
-case class QuantizeLatticeI(child: Expression, scale: Long, shift: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "quantize_lattice_i"
-
-  private def et: Int = child.dataType match {
-    case ArrayType(FloatType, _) => 0
-    case ArrayType(DoubleType, _) => 1
-    case ArrayType(IntegerType, _) => 2
-    case ArrayType(LongType, _) => 3
-    case t => throw new IllegalArgumentException(s"quantize_lattice_i: $t")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    VecKernel.quantizeLatticeI(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], scale, shift, et)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VecKernel.quantizeLatticeI($c, ${scale}L, ${shift}L, $et);")
-
-  override protected def withNewChildInternal(c: Expression): QuantizeLatticeI =
-    copy(child = c)
-}
-
-/** Exact long dot of two pre-quantized int lattice vectors
-  * (VecKernel.latticeDotI).
+/** Ascending-index pairs of an id array: `long_pairs` over array<bigint>
+  * (TextKernel.longPairs, the posting-bucket pair expansion) and
+  * `string_pairs` over array<string> (TextKernel.stringPairs, the
+  * sourceOverlap expansion); order-exact vs the nested-transform dag
+  * (OpsSpec pin). A class so that a wrong element type fails at analysis:
+  * StaticInvoke checks no input type, and the kernel would misread the array.
   */
-case class LatticeDotI(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "lattice_dot_i"
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    VecKernel.latticeDotI(
-      l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) =>
-      s"${ev.value} = graft.functions.VecKernel.latticeDotI($l, $r);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): LatticeDotI =
-    copy(left = l, right = r)
-}
-
-/** Native hyperplane-LSH signature over an array<float> column. */
-case class HyperplaneSig(child: Expression, planes: Array[Double], nBits: Int, dim: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hyperplane_sig"
-
-  override def nullSafeEval(v: Any): Any =
-    VecKernel.lshSig(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      planes, nBits, dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val p = ctx.addReferenceObj("lshPlanes", planes, "double[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VecKernel.lshSig($c, $p, $nBits, $dim);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneSig =
-    copy(child = newChild)
-}
-
-/** Native IVF coarse-quantizer: nearest-centroid cell id for array<float>. */
-case class NearestCentroid(child: Expression, cents: Array[Double], nList: Int, dim: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "nearest_centroid"
-
-  override def nullSafeEval(v: Any): Any =
-    VecKernel.nearestCentroid(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], cents, nList, dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("ivfCents", cents, "double[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VecKernel.nearestCentroid($c, $cRef, $nList, $dim);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
-    copy(child = newChild)
-}
-
-/** Native exact-lattice k-means assignment (ops/Cluster): packed
-  * `dist2*65536 + cluster` of the nearest centroid over a long-quantized
-  * vector — see VecKernel.latticeNearest for the packing/tie contract.
-  */
-case class LatticeNearest(child: Expression, cents: Array[Long], k: Int, dim: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "lattice_nearest"
-
-  override def nullSafeEval(v: Any): Any =
-    VecKernel.latticeNearest(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], cents, k, dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("latticeCents", cents, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VecKernel.latticeNearest($c, $cRef, $k, $dim);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LatticeNearest =
-    copy(child = newChild)
-}
-
-/** Two-level pruned lattice assignment (VecKernel.latticeNearestPruned):
-  * the large-k escape for LatticeNearest's flat scan.
-  */
-case class LatticeNearestPruned(child: Expression, cents: Array[Long], k: Int,
-                                dim: Int, superOf: Array[Int],
-                                superCents: Array[Long], nSuper: Int, nProbe: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "lattice_nearest_pruned"
-
-  override def nullSafeEval(v: Any): Any =
-    VecKernel.latticeNearestPruned(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      cents, k, dim, superOf, superCents, nSuper, nProbe)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("latticeCents", cents, "long[]")
-    val soRef = ctx.addReferenceObj("latticeSuperOf", superOf, "int[]")
-    val scRef = ctx.addReferenceObj("latticeSuperCents", superCents, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VecKernel.latticeNearestPruned(" +
-        s"$c, $cRef, $k, $dim, $soRef, $scRef, $nSuper, $nProbe);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LatticeNearestPruned =
-    copy(child = newChild)
-}
-
-/** Native IVF probe list: the nProbe nearest cells for a query vector. */
-case class TopCells(child: Expression, cents: Array[Double], nList: Int, dim: Int,
-                    nProbe: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "top_cells"
-
-  override def nullSafeEval(v: Any): Any =
-    VecKernel.topCells(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], cents, nList, dim, nProbe)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("ivfCents", cents, "double[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VecKernel.topCells($c, $cRef, $nList, $dim, $nProbe);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): TopCells =
-    copy(child = newChild)
-}
-
-/** Native curation-grade text normalization: NFC + control-strip +
-  * whitespace-collapse + trim, one pass (see TextKernel for the exact spec
-  * and the cross-engine ordering rationale).
-  */
-/** BPE train-step kernels (BpeKernel): initial word→symbols split, one
-  * merge application, and the rank-priority encode loop. a/b/merges enter
-  * codegen as reference objects, never spliced into source.
-  */
-case class BpeInitSymbols(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "bpe_init_symbols"
-
-  override def nullSafeEval(v: Any): Any =
-    BpeKernel.initSymbols(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeKernel.initSymbols($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): BpeInitSymbols =
-    copy(child = newChild)
-}
-
-case class BpeMergePair(child: Expression, a: String, b: String)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "bpe_merge_pair"
-
-  @transient private lazy val aU = org.apache.spark.unsafe.types.UTF8String.fromString(a)
-  @transient private lazy val bU = org.apache.spark.unsafe.types.UTF8String.fromString(b)
-
-  override def nullSafeEval(v: Any): Any =
-    BpeKernel.mergePair(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], aU, bU)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val ar = ctx.addReferenceObj("bpeA", aU, "org.apache.spark.unsafe.types.UTF8String")
-      val br = ctx.addReferenceObj("bpeB", bU, "org.apache.spark.unsafe.types.UTF8String")
-      s"${ev.value} = graft.functions.BpeKernel.mergePair($c, $ar, $br);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): BpeMergePair =
-    copy(child = newChild)
-}
-
-/** Batched variant of [[BpeMergePair]]: applies a whole symbol-disjoint
-  * merge batch (flattened [l0, r0, l1, r1, ...], rank order) in one kernel
-  * call — one reference object and one virtual call per row instead of a
-  * batch-deep expression chain.
-  */
-case class BpeMergeBatch(child: Expression, flatPairs: Array[String])
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "bpe_merge_batch"
-
-  @transient private lazy val flatU: Array[org.apache.spark.unsafe.types.UTF8String] =
-    flatPairs.map(org.apache.spark.unsafe.types.UTF8String.fromString)
-
-  override def nullSafeEval(v: Any): Any =
-    BpeKernel.mergeBatch(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], flatU)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val fr = ctx.addReferenceObj("bpeBatch", flatU,
-        "org.apache.spark.unsafe.types.UTF8String[]")
-      s"${ev.value} = graft.functions.BpeKernel.mergeBatch($c, $fr);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): BpeMergeBatch =
-    copy(child = newChild)
-}
-
-case class BpeEncode(child: Expression, merges: Array[String])
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "bpe_encode"
-
-  @transient private lazy val ranks = BpeKernel.buildRanks(merges)
-
-  override def nullSafeEval(v: Any): Any =
-    BpeKernel.encode(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], ranks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.addReferenceObj("bpeRanks", ranks, "java.util.HashMap")
-      s"${ev.value} = graft.functions.BpeKernel.encode($c, $r);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): BpeEncode =
-    copy(child = newChild)
-}
-
-case class NormalizeText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "normalize_text"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.normalize(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.normalize($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): NormalizeText =
-    copy(child = newChild)
-}
-
-/** Accent stripping via NFD → drop-Mn → NFC (see TextKernel.stripAccents);
-  * parity target is utf8proc-style `strip_accents` in SQL engines.
-  */
-case class StripAccents(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "strip_accents"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.stripAccents(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.stripAccents($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): StripAccents =
-    copy(child = newChild)
-}
-
-/** Native PII redaction: emails / IPv4 literals / phone-shaped numbers →
-  * typed placeholders, fixed pass order (see TextKernel.redactPii).
-  */
-case class RedactPii(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "redact_pii"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.redactPii(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.redactPii($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): RedactPii =
-    copy(child = newChild)
-}
-
-/** Count of PII matches RedactPii would replace (same sequential passes). */
-case class PiiCount(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "pii_count"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.piiCount(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.piiCount($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): PiiCount =
-    copy(child = newChild)
-}
-
-/** Native 64-bit SimHash over a string column. */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-
-  override def nullSafeEval(v: Any): Any =
-    VecKernel.simhash64(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VecKernel.simhash64($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-/** Aho–Corasick multi-pattern occurrence counts: one automaton walk per
-  * document counts every pattern at once (overlapping occurrences
-  * included) — the blocklist-scan kernel. The automaton compiles lazily
-  * once per expression instance (driver at codegen, or executor on
-  * deserialization for the interpreted path) and rides the codegen
-  * reference array; the scan is a narrow O(|text| + hits) loop inside
-  * whole-stage codegen.
-  */
-case class MultiPatternCounts(child: Expression, patterns: Seq[String])
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "multi_pattern_counts"
-
-  @transient private lazy val auto = AhoCorasick.compile(patterns.toArray)
-
-  override def nullSafeEval(v: Any): Any =
-    AcKernel.counts(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], auto)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val autoRef = ctx.addReferenceObj("acAuto", auto,
-      classOf[AcAutomaton].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.AcKernel.counts($c, $autoRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MultiPatternCounts =
-    copy(child = newChild)
-}
-
-/** Column-API + SQL surface for the custom expressions. */
-
-/** Winnowing fingerprints, fused tokenize→gram-hash→window-min→distinct
-  * (TextKernel.winnowFps; bit-parity with the HOF dag pinned in OpsSpec).
-  */
-case class WinnowFps(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "winnow_fps"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.winnowFps(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.winnowFps($c, $k, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowFps =
-    copy(child = newChild)
-}
-
-/** Distinct w-gram strings over lower(trim(text)) \s+ tokens
-  * (TextKernel.shingleStrings; parity with Dedup.shingles' dag pinned in
-  * OpsSpec).
-  */
-case class ShingleStrings(child: Expression, w: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "shingle_strings"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.shingleStrings(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.shingleStrings($c, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleStrings =
-    copy(child = newChild)
-}
-
-/** Achlioptas ±1 projection of an integer-lattice vector to outDim exact
-  * integer components (VecKernel.randomProjectSigns; OpsSpec parity pin).
-  */
-case class RandomProjectSigns(child: Expression, outDim: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "random_project_signs"
-
-  override def nullSafeEval(v: Any): Any =
-    VecKernel.randomProjectSigns(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], outDim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VecKernel.randomProjectSigns($c, $outDim);")
-
-  override protected def withNewChildInternal(newChild: Expression): RandomProjectSigns =
-    copy(child = newChild)
-}
-
-/** nSub contiguous subDim-length subvectors of a quantized vector
-  * (VecKernel.subvectors; Pq staging).
-  */
-case class Subvectors(child: Expression, nSub: Int, subDim: Int)
-    extends UnaryExpression {
+case class IdPairs(child: Expression, elem: DataType)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
+  private def isLong = elem == LongType
+  override def prettyName: String = if (isLong) "long_pairs" else "string_pairs"
   override def dataType: DataType =
-    ArrayType(ArrayType(LongType, containsNull = false), containsNull = false)
-  override def prettyName: String = "subvectors"
+    if (isLong) gfn.arr(gfn.struct("a_id" -> elem, "b_id" -> elem))
+    else gfn.arr(gfn.struct("a" -> elem, "b" -> elem))
 
-  override def nullSafeEval(v: Any): Any =
-    VecKernel.subvectors(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], nSub, subDim)
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(`elem`, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName takes array<${elem.simpleString}>, got $t")
+  }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VecKernel.subvectors($c, $nSub, $subDim);")
+  override lazy val replacement: Expression =
+    gfn.call(TextKernel, if (isLong) "longPairs" else "stringPairs", dataType, Seq(child))
 
-  override protected def withNewChildInternal(newChild: Expression): Subvectors =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): IdPairs = copy(child = c)
 }
 
-
-/** Ascending-index (a_id, b_id) pairs of a long id array
-  * (TextKernel.longPairs; the posting-bucket pair expansion, order-exact
-  * vs the nested-transform dag — OpsSpec pin).
+/** Column API over the kernels; the SQL names are registered from
+  * graft.GraftExtensions' table, which calls these same functions.
   */
-case class LongPairs(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("a_id", LongType, nullable = false),
-    StructField("b_id", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "long_pairs"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"long_pairs takes array<bigint>, got $t")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.longPairs(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.longPairs($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): LongPairs =
-    copy(child = newChild)
-}
-
-
-/** Ascending-index (a, b) pairs of a string array (TextKernel.stringPairs;
-  * the sourceOverlap pair expansion).
-  */
-case class StringPairs(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("a", StringType, nullable = false),
-    StructField("b", StringType, nullable = false))), containsNull = false)
-  override def prettyName: String = "string_pairs"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"string_pairs takes array<string>, got $t")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.stringPairs(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.stringPairs($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): StringPairs =
-    copy(child = newChild)
-}
-
-
-/** Fused DSIR bigram hash buckets (TextKernel.dsirBuckets; OpsSpec pin vs
-  * the transform/zip_with dag).
-  */
-case class DsirBuckets(child: Expression, buckets: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "dsir_buckets"
-
-  override def nullSafeEval(v: Any): Any =
-    TextKernel.dsirBuckets(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernel.dsirBuckets($c, ${buckets}L);")
-
-  override protected def withNewChildInternal(newChild: Expression): DsirBuckets =
-    copy(child = newChild)
-}
-
 object gfn {
   private def col(e: Expression): Column = ColumnBridge.column(e)
   private def ex(c: Column): Expression = ColumnBridge.expression(c)
 
-  def try_gunzip(c: Column): Column = col(TryGunzip(ex(c)))
-  def deflate_len(c: Column): Column = col(DeflateLen(ex(c)))
-  def lenient_ts(c: Column, zone: String = "UTC"): Column = col(LenientTimestamp(ex(c), zone))
+  private[functions] def arr(t: DataType): DataType = ArrayType(t, containsNull = false)
+  private[functions] def struct(fields: (String, DataType)*): DataType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+
+  /** A JVM object (array, map, automaton) passed to the kernel as is. */
+  private def obj(v: AnyRef): Literal = Literal(v, ObjectType(v.getClass))
+
+  /** `kernel.method(args...)` as a StaticInvoke: null when an argument is
+    * null, and otherwise only when `nullableResult` (the kernel may return
+    * null itself).
+    */
+  private[functions] def call(kernel: AnyRef, method: String, dataType: DataType,
+                              args: Seq[Expression],
+                              nullableResult: Boolean = false): Expression =
+    StaticInvoke(kernel.getClass, dataType, method, args, returnNullable = nullableResult)
+
+  /** [[call]] over Columns, Expressions and plain values (→ Literals). */
+  private def kernel(kernel: AnyRef, method: String, dataType: DataType, args: Any*): Column =
+    col(call(kernel, method, dataType, args.map {
+      case c: Column => ex(c)
+      case e: Expression => e
+      case v => Literal(v)
+    }))
+
+  private val pair = struct("w1" -> StringType, "w2" -> StringType)
+
+  /** O4: inflate gzip values, pass others through; null on a corrupt stream. */
+  def try_gunzip(c: Column): Column =
+    col(call(GzipUtil, "maybeGunzip", BinaryType, Seq(ex(c)), nullableResult = true))
+  /** DEFLATE-compressed byte length (zlib level 6, raw stream): the
+    * compression-ratio quality signal's numerator.
+    */
+  def deflate_len(c: Column): Column = kernel(GzipUtil, "deflateLen", LongType, c)
+  /** O9: lenient multi-format parse → timestamp, null when unparseable; the
+    * zone applies to zone-less formats and rides as an object, never
+    * spliced into generated source.
+    */
+  def lenient_ts(c: Column, zone: String = "UTC"): Column = col(call(LenientTs,
+    "parseMicros", TimestampType, Seq(ex(c), obj(zone)), nullableResult = true))
   def kpl_deaggregate(c: Column): Column = col(KplDeaggregate(ex(c)))
-  def shingle_hashes(c: Column, w: Int = 3): Column = col(ShingleHashes(ex(c), w))
+
+  /** Distinct 31-bit hashes of w-token windows (MinHashKernel). */
+  def shingle_hashes(c: Column, w: Int = 3): Column =
+    kernel(MinHashKernel, "shingleHashes", arr(LongType), c, w, true)
+  /** [[shingle_hashes]] unfolded: 64-bit hashes for set-exact counting. */
   def shingle_hashes64(c: Column, w: Int = 3): Column =
-    col(ShingleHashes(ex(c), w, fold31 = false))
+    kernel(MinHashKernel, "shingleHashes", arr(LongType), c, w, false)
   def minhash_sig(c: Column, a: Array[Long], b: Array[Long]): Column =
-    col(MinHashSig(ex(c), a, b))
-  def vec_cosine(l: Column, r: Column): Column = col(VecCosine(ex(l), ex(r)))
-  def quantized_dot(l: Column, r: Column): Column = col(QuantizedDot(ex(l), ex(r)))
+    kernel(MinHashKernel, "signature", arr(LongType), c, obj(a), obj(b))
+  /** Exact w-shingle Jaccard of two texts (string-set semantics). */
+  def ngram_jaccard(l: Column, r: Column, w: Int = 3): Column =
+    kernel(MinHashKernel, "ngramJaccard", DoubleType, l, r, w)
+
+  def vec_cosine(l: Column, r: Column): Column = kernel(VecKernel, "cosineF", DoubleType, l, r)
+  /** sum(round(x*1000)*round(y*1000)) in exact long arithmetic. */
+  def quantized_dot(l: Column, r: Column): Column =
+    kernel(VecKernel, "quantizedDot", LongType, l, r)
+  def quantize_lattice(c: Column, scale: Long, shift: Long): Column =
+    col(QuantizeLattice(ex(c), scale, shift, toInt = false))
+  def quantize_lattice_i(c: Column, scale: Long, shift: Long): Column =
+    col(QuantizeLattice(ex(c), scale, shift, toInt = true))
+  def lattice_dot_i(l: Column, r: Column): Column =
+    kernel(VecKernel, "latticeDotI", LongType, l, r)
+  /** Hyperplane-LSH signature bits over row-major (nBits × dim) planes. */
+  def hyperplane_sig(c: Column, planes: Array[Double], nBits: Int, dim: Int): Column =
+    kernel(VecKernel, "lshSig", LongType, c, obj(planes), nBits, dim)
+  /** IVF coarse quantizer: the max-dot cell id. */
+  def nearest_centroid(c: Column, cents: Array[Double], nList: Int, dim: Int): Column =
+    kernel(VecKernel, "nearestCentroid", IntegerType, c, obj(cents), nList, dim)
+  /** IVF probe list: the nProbe max-dot cells, best first. */
+  def top_cells(c: Column, cents: Array[Double], nList: Int, dim: Int, nProbe: Int): Column =
+    kernel(VecKernel, "topCells", arr(IntegerType), c, obj(cents), nList, dim, nProbe)
+  /** Exact lattice k-means assignment, packed `dist2*65536 + cluster`. */
+  def lattice_nearest(c: Column, cents: Array[Long], k: Int, dim: Int): Column =
+    kernel(VecKernel, "latticeNearest", LongType, c, obj(cents), k, dim)
+  /** Two-level pruned [[lattice_nearest]], the large-k escape. */
+  def lattice_nearest_pruned(c: Column, cents: Array[Long], k: Int, dim: Int,
+                             superOf: Array[Int], superCents: Array[Long],
+                             nSuper: Int, nProbe: Int): Column =
+    kernel(VecKernel, "latticeNearestPruned", LongType, c, obj(cents), k, dim, obj(superOf),
+      obj(superCents), nSuper, nProbe)
+  /** Achlioptas ±1 projection of a lattice vector to outDim exact sums. */
+  def random_project_signs(c: Column, outDim: Int): Column =
+    kernel(VecKernel, "randomProjectSigns", arr(LongType), c, outDim)
+  /** nSub contiguous subDim-length subvectors (Pq staging). */
+  def subvectors(c: Column, nSub: Int, subDim: Int): Column =
+    kernel(VecKernel, "subvectors", arr(arr(LongType)), c, nSub, subDim)
+  def simhash64(c: Column): Column = kernel(VecKernel, "simhash64", LongType, c)
+
+  /** Token-level Levenshtein distance (WER numerator), capped per side. */
   def edit_tokens(l: Column, r: Column, cap: Int = 512): Column =
-    col(EditTokens(ex(l), ex(r), cap))
+    kernel(TextKernel, "editDist", LongType, l, r, cap)
+  /** Token-LCS length (ROUGE-L core), capped per side. */
   def lcs_tokens(l: Column, r: Column, cap: Int = 512): Column =
-    col(LcsTokens(ex(l), ex(r), cap))
+    kernel(TextKernel, "lcsLen", LongType, l, r, cap)
+  /** Per-order clipped char n-gram stats for n = 1..maxN (chrF core). */
   def clipped_grams(l: Column, r: Column, maxN: Int = 3): Column =
-    col(ClippedGrams(ex(l), ex(r), maxN))
-  def luhn_count(c: Column): Column = col(LuhnCount(ex(c)))
-  def roll_hash31(c: Column): Column = col(RollHash31(ex(c)))
+    kernel(TextKernel, "clippedGrams", arr(struct("m" -> LongType, "ct" -> LongType,
+      "rt" -> LongType)), l, r, maxN)
+  /** Luhn-validated payment-card-shaped digit runs per string. */
+  def luhn_count(c: Column): Column = kernel(TextKernel, "luhnCount", LongType, c)
+  /** Polynomial 31-bit rolling code-point hash. */
+  def roll_hash31(c: Column): Column = kernel(TextKernel, "rollHash31", LongType, c)
+  /** Multiset w-token window hashes, duplicates kept (soft dedup). */
   def gram_hash_multiset(c: Column, w: Int): Column =
-    col(GramHashMultiset(ex(c), w))
+    kernel(TextKernel, "gramHashMultiset", arr(LongType), c, w)
+  /** Positional code-point checksum bucket (the q139 feature hash). */
   def ascii_weighted_mod(c: Column, m: Long): Column =
-    col(AsciiWeightedMod(ex(c), m))
+    kernel(TextKernel, "asciiWeightedMod", LongType, c, m)
+  /** Per-(doc, n) gram-repetition stats for n = minN..maxN. */
   def gram_rep_stats(c: Column, minN: Int, maxN: Int): Column =
-    col(GramRepStats(ex(c), minN, maxN))
-  def bigram_hash_keys(c: Column): Column = col(BigramHashKeys(ex(c)))
-  def trigram_hash_keys(c: Column): Column = col(TrigramHashKeys(ex(c)))
-  def tokens(c: Column): Column = col(Tokens(ex(c)))
-  def bigram_structs(c: Column): Column = col(BigramStructs(ex(c)))
-  def trigram_structs(c: Column): Column = col(TrigramStructs(ex(c)))
+    kernel(TextKernel, "gramRepStats", arr(struct("n" -> IntegerType,
+      "n_types" -> LongType, "n_grams" -> LongType, "top_m" -> LongType,
+      "top_chars" -> LongType, "dup_chars" -> LongType)), c, minN, maxN)
+  /** Per adjacent bigram, its xxhash64 join keys (h12, h1, h2). */
+  def bigram_hash_keys(c: Column): Column = kernel(TextKernel, "bigramHashKeys",
+    arr(struct("h12" -> LongType, "h1" -> LongType, "h2" -> LongType)), c)
+  /** Per adjacent trigram, its xxhash64 join keys (h123, h12, h23, h2, h3). */
+  def trigram_hash_keys(c: Column): Column = kernel(TextKernel, "trigramHashKeys",
+    arr(struct("h123" -> LongType, "h12" -> LongType, "h23" -> LongType,
+      "h2" -> LongType, "h3" -> LongType)), c)
+  /** Space-split tokens, empties dropped. */
+  def tokens(c: Column): Column = kernel(TextKernel, "tokens", arr(StringType), c)
+  def bigram_structs(c: Column): Column = kernel(TextKernel, "bigramStructs", arr(pair), c)
+  def trigram_structs(c: Column): Column = kernel(TextKernel, "trigramStructs",
+    arr(struct("w1" -> StringType, "w2" -> StringType, "w3" -> StringType)), c)
+  /** Ordered skip-gram pairs within `window`. */
   def skipgram_pairs(c: Column, window: Int): Column =
-    col(SkipgramPairs(ex(c), window))
-  def del1_sigs(c: Column): Column = col(Del1Sigs(ex(c)))
+    kernel(TextKernel, "skipgramPairs", arr(pair), c, window)
+  /** xxhash64 of a string and of its single-deletion variants. */
+  def del1_sigs(c: Column): Column = kernel(TextKernel, "del1Sigs", arr(LongType), c)
+  /** Winnowing fingerprints: tokenize → gram hash → window min → distinct. */
+  def winnow_fps(c: Column, k: Int, w: Int): Column =
+    kernel(TextKernel, "winnowFps", arr(LongType), c, k, w)
+  /** Distinct w-gram strings over split(lower(trim(text)), "\\s+"). */
+  def shingle_strings(c: Column, w: Int = 3): Column =
+    kernel(TextKernel, "shingleStrings", arr(StringType), c, w)
+  def long_pairs(c: Column): Column = col(IdPairs(ex(c), LongType))
+  def string_pairs(c: Column): Column = col(IdPairs(ex(c), StringType))
+  /** DSIR bigram hash buckets. */
+  def dsir_buckets(c: Column, buckets: Long): Column =
+    kernel(TextKernel, "dsirBuckets", arr(LongType), c, buckets)
+  /** NFC + control-strip + whitespace-collapse + trim. */
+  def normalize_text(c: Column): Column = kernel(TextKernel, "normalize", StringType, c)
+  /** NFD → drop combining marks → NFC. */
+  def strip_accents(c: Column): Column = kernel(TextKernel, "stripAccents", StringType, c)
+  /** Emails / IPv4 literals / phone-shaped numbers → typed placeholders. */
+  def redact_pii(c: Column): Column = kernel(TextKernel, "redactPii", StringType, c)
+  /** Number of matches [[redact_pii]] would replace. */
+  def pii_count(c: Column): Column = kernel(TextKernel, "piiCount", IntegerType, c)
+
+  /** BPE train/encode steps: word → initial symbols, one merge, a batch of
+    * symbol-disjoint merges (flattened [l0, r0, l1, r1, ...], rank order),
+    * and the rank-priority encode loop over a merge table.
+    */
+  def bpe_init_symbols(c: Column): Column = kernel(BpeKernel, "initSymbols", arr(StringType), c)
+  def bpe_merge_pair(c: Column, a: String, b: String): Column =
+    kernel(BpeKernel, "mergePair", arr(StringType), c, a, b)
+  def bpe_merge_batch(c: Column, flatPairs: Array[String]): Column =
+    kernel(BpeKernel, "mergeBatch", arr(StringType), c, obj(flatPairs.map(UTF8String.fromString)))
+  def bpe_encode(c: Column, merges: Array[String]): Column =
+    kernel(BpeKernel, "encode", arr(StringType), c, obj(BpeKernel.buildRanks(merges)))
+  /** Aho–Corasick occurrence counts of every pattern (overlaps included);
+    * the automaton compiles once here and is shared by every row.
+    */
+  def multi_pattern_counts(c: Column, patterns: Seq[String]): Column =
+    kernel(AcKernel, "counts", arr(LongType), c, obj(AhoCorasick.compile(patterns.toArray)))
+
   /** Drop-in for the builtin `percentile(c, f)` on DOUBLE columns —
     * bit-identical output (OpsSpec pin), primitive buffer instead of the
     * builtin's boxed-Double OpenHashMap. Same aggregate operator placement
@@ -1132,64 +299,11 @@ object gfn {
     */
   def majority_label(c: Column): Column =
     col(MajorityLabelLong(ex(c)).toAggregateExpression())
-  def winnow_fps(c: Column, k: Int, w: Int): Column = col(WinnowFps(ex(c), k, w))
-  def shingle_strings(c: Column, w: Int = 3): Column = col(ShingleStrings(ex(c), w))
-  def random_project_signs(c: Column, outDim: Int): Column =
-    col(RandomProjectSigns(ex(c), outDim))
-  def subvectors(c: Column, nSub: Int, subDim: Int): Column =
-    col(Subvectors(ex(c), nSub, subDim))
-  def long_pairs(c: Column): Column = col(LongPairs(ex(c)))
-  def string_pairs(c: Column): Column = col(StringPairs(ex(c)))
-  def dsir_buckets(c: Column, buckets: Long): Column =
-    col(DsirBuckets(ex(c), buckets))
-  def quantize_lattice(c: Column, scale: Long, shift: Long): Column =
-    col(QuantizeLattice(ex(c), scale, shift))
-  def quantize_lattice_i(c: Column, scale: Long, shift: Long): Column =
-    col(QuantizeLatticeI(ex(c), scale, shift))
-  def lattice_dot_i(l: Column, r: Column): Column =
-    col(LatticeDotI(ex(l), ex(r)))
-  def ngram_jaccard(l: Column, r: Column, w: Int = 3): Column =
-    col(NgramJaccard(ex(l), ex(r), w))
-  def hyperplane_sig(c: Column, planes: Array[Double], nBits: Int, dim: Int): Column =
-    col(HyperplaneSig(ex(c), planes, nBits, dim))
-  def simhash64(c: Column): Column = col(SimHash64(ex(c)))
-  def normalize_text(c: Column): Column = col(NormalizeText(ex(c)))
-  def strip_accents(c: Column): Column = col(StripAccents(ex(c)))
-  def bpe_init_symbols(c: Column): Column = col(BpeInitSymbols(ex(c)))
-  def bpe_merge_batch(c: Column, flatPairs: Array[String]): Column =
-    col(BpeMergeBatch(ex(c), flatPairs))
-  def bpe_merge_pair(c: Column, a: String, b: String): Column =
-    col(BpeMergePair(ex(c), a, b))
-  def bpe_encode(c: Column, merges: Array[String]): Column =
-    col(BpeEncode(ex(c), merges))
-  def multi_pattern_counts(c: Column, patterns: Seq[String]): Column =
-    col(MultiPatternCounts(ex(c), patterns))
-  def redact_pii(c: Column): Column = col(RedactPii(ex(c)))
-  def pii_count(c: Column): Column = col(PiiCount(ex(c)))
-  def nearest_centroid(c: Column, cents: Array[Double], nList: Int, dim: Int): Column =
-    col(NearestCentroid(ex(c), cents, nList, dim))
-  def lattice_nearest(c: Column, cents: Array[Long], k: Int, dim: Int): Column =
-    col(LatticeNearest(ex(c), cents, k, dim))
-  def lattice_nearest_pruned(c: Column, cents: Array[Long], k: Int, dim: Int,
-                             superOf: Array[Int], superCents: Array[Long],
-                             nSuper: Int, nProbe: Int): Column =
-    col(LatticeNearestPruned(ex(c), cents, k, dim, superOf, superCents, nSuper, nProbe))
   def heavy_hitters(term: Column, m: Int): Column =
     col(HeavyHitters(ex(term), m).toAggregateExpression())
   def topk_by_score(score: Column, id: Column, k: Int): Column =
-    col(TopKByScore(ex(score.cast("double")), ex(id.cast("long")), k)
+    col(TopKByScore(Cast(ex(score), DoubleType), Cast(ex(id), LongType), k)
       .toAggregateExpression())
   def gram_matrix(vec: Column, dim: Int): Column =
     col(GramMatrix(ex(vec), dim).toAggregateExpression())
-  def top_cells(c: Column, cents: Array[Double], nList: Int, dim: Int, nProbe: Int): Column =
-    col(TopCells(ex(c), cents, nList, dim, nProbe))
-
-  /** Register for spark.sql use. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("try_gunzip", es => TryGunzip(es.head), "builtin")
-    reg.createOrReplaceTempFunction("lenient_ts",
-      es => LenientTimestamp(es.head, "UTC"), "builtin")
-    reg.createOrReplaceTempFunction("kpl_deaggregate", es => KplDeaggregate(es.head), "builtin")
-  }
 }

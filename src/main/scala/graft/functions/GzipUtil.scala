@@ -61,4 +61,6 @@ object GzipUtil {
     d.end()
     total
   }
+
+  def deflateLen(s: org.apache.spark.unsafe.types.UTF8String): Long = deflateLen(s.getBytes)
 }

@@ -71,6 +71,9 @@ object LenientTs {
     false
   }
 
+  def parseMicros(s: org.apache.spark.unsafe.types.UTF8String, zoneId: String): java.lang.Long =
+    parseMicros(s.toString, zoneId)
+
   def parseMicros(s: String, zoneId: String): java.lang.Long = {
     if (s == null) return null
     val t = s.trim

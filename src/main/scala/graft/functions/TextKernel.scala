@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
-/** JVM kernel for text normalization (called from codegen'd NormalizeText).
+/** JVM text kernels, called through StaticInvoke from `gfn` (normalize_text,
+  * tokens, shingle_strings, ...). Text normalization ([[normalize]]):
   *
   * Pipeline, in an order chosen so an engine-independent regex formulation
   * produces byte-identical output (the q51 oracle re-derives it in DuckDB):
@@ -826,10 +827,11 @@ object TextKernel {
     *     i -> concat_ws(" ", slice(toks, i + 1, w))))
     * over toks = split(lower(trim(text)), "\\s+"). Replicates Spark's
     * composition exactly (OpsSpec pin): trim strips 0x20 only; lower is
-    * UTF8String.toLowerCase; regex-\s+ split emits a LEADING empty token
-    * when the trimmed text starts with non-space whitespace, keeps
-    * interior empties never (maximal runs), drops trailing empties, and
-    * yields [""] for empty input — so the empty doc emits the "" gram;
+    * UTF8String.toLowerCase; regex-\s+ split (limit -1) emits a LEADING
+    * empty token when the trimmed text starts with non-space whitespace
+    * and a TRAILING one when it ends in it (\t\n\r\f\x0b survive the
+    * trim), keeps interior empties never (maximal runs), and yields [""]
+    * for empty input — so the empty doc emits the "" gram;
     * the final (or only) grams truncate at the token list's end;
     * first-occurrence order. Gram strings are built once into a shared
     * byte buffer (the dag rebuilt them through three interpreted lambda
@@ -867,6 +869,7 @@ object TextKernel {
           push(st, i)
         }
       }
+      if (isWs(bytes(n - 1))) push(n, n) // trailing separator -> trailing ""
     }
     val nGrams = math.max(nTok - w, 0) + 1
     val out = new java.util.ArrayList[Any](nGrams)

@@ -327,6 +327,10 @@ object VecKernel {
     * transform+slice pair evaluated interpreted per subvector.
     */
   def subvectors(qv: ArrayData, nSub: Int, subDim: Int): ArrayData = {
+    // UnsafeArrayData reads past its end unchecked
+    if (qv.numElements() < nSub * subDim)
+      throw new IllegalArgumentException(
+        s"subvectors: vector has ${qv.numElements()} elements, expected at least ${nSub * subDim}")
     val rows = new Array[Any](nSub)
     var s = 0
     while (s < nSub) {

@@ -55,7 +55,7 @@ object Cluster {
 
   /** Packed `dist2*65536 + cluster` of the nearest centroid — the native
     * codegen kernel (VecKernel.latticeNearest; centroids ride along as a
-    * codegen reference object, the NearestCentroid/IVF pattern). Packing
+    * codegen reference object, the nearest_centroid/IVF pattern). Packing
     * IS the argmin tie rule: lexicographic (dist2, cluster) minimum, ties
     * to the lower cluster id. The earlier k×dim-literal HOF formulation
     * computed the same thing but paid ~1.5 s of expression analysis per

@@ -192,7 +192,7 @@ object Dedup {
     // empty-doc edges (OpsSpec pin); one byte pass per doc.
     graft.functions.gfn.shingle_strings(text, w)
 
-  /** doc_id + 31-bit hashed w-shingles, via the native ShingleHashes
+  /** doc_id + 31-bit hashed w-shingles, via the native shingle_hashes
     * expression (one primitive loop per doc; no shingle strings, no
     * interpreted higher-order functions on the hot path).
     */
@@ -918,7 +918,7 @@ object Dedup {
     // typed struct<src_a:string,src_b:string>, so a non-string group (an
     // int snapshot id, a date) would otherwise fail analysis with a
     // branch-type mismatch.
-    // grams travel as 64-bit hashes from the native ShingleHashes kernel
+    // grams travel as 64-bit hashes from the native shingle_hashes64 kernel
     // (one primitive loop per doc), never as strings: the corpus-sized
     // distinct + the per-gram collect_set then carry (string, long) rows
     // ~5x narrower and skip the per-window concat_ws allocation — the

@@ -468,7 +468,7 @@ object Eval {
     *
     * Scale shape: ZERO shuffle — both sides of a pair live on one row, so
     * the clipped gram counting is a single codegen'd kernel call per pair
-    * (`functions/ClippedGrams`, one ref-side HashMap per order) and the
+    * (`TextKernel.clippedGrams`, one ref-side HashMap per order) and the
     * per-order F's fold narrowly over the resulting array. The previous
     * (pair, n, gram) explode-and-count shape shuffled/spilled the whole
     * gram stream for a computation that never crosses rows — this is the
@@ -993,7 +993,7 @@ object Eval {
     * (candidate, reference) pair — the order-sensitive complement to
     * [[bleuPairs]]' bag-of-grams metrics (a shuffled candidate keeps its
     * ROUGE-1 but loses its ROUGE-L). The LCS runs in the codegen'd
-    * [[graft.functions.LcsTokens]] kernel — one tight two-row-DP JVM loop
+    * [[graft.functions.TextKernel.lcsLen]] kernel — one tight two-row-DP JVM loop
     * per pair, O(cap²) time / O(cap) space bounded by `maxTokens`
     * (truncation is the documented scale contract; standard ROUGE operates
     * on summary-length sides). Everything downstream of the integer LCS
@@ -1040,7 +1040,7 @@ object Eval {
     * whitespace-tokenized and truncated at `maxTokens` (the rougeL
     * truncation contract — it bounds the O(cap²) DP, and truncation IS
     * the 100 TB answer to adversarially long rows). One codegen'd kernel
-    * call per pair (`functions/EditTokens`, two-row DP) plus one IEEE
+    * call per pair (`TextKernel.editDist`, two-row DP) plus one IEEE
     * division; empty-reference rows emit a NULL wer (edits still
     * reported). No SQL engine exposes token-level edit distance, so the
     * catalog face is rows-only — OpsSpec replays the DP in plain Scala.

@@ -24,7 +24,7 @@ import org.apache.spark.storage.StorageLevel
   * Scale shape:
   *  - train: `iters` passes over the corpus; each pass assigns ALL
   *    subspaces in one narrow projection (a when-chain of per-subspace
-  *    codegen'd LatticeNearest kernels) and partial-aggregates to
+  *    codegen'd lattice_nearest kernels) and partial-aggregates to
   *    nSub·k·subDim exact sum rows — the only driver state is the
   *    codebook (nSub·k·subDim longs, e.g. 8·16·8 = 1 Ki).
   *  - encode: one narrow projection per corpus row (nSub kernel calls),

@@ -59,6 +59,29 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(w == 1.0)
   }
 
+  test("every SQL function resolves at each arity; other arities and non-literal knobs are refused") {
+    val spark = SparkTestSession.spark
+    Seq("try_gunzip(cast('x' AS BINARY))", "lenient_ts('2026-08-12')",
+      "lenient_ts('2026-08-12', 'UTC')", "kpl_deaggregate(cast('x' AS BINARY))",
+      "ngram_jaccard('a b', 'a b')", "ngram_jaccard('a b', 'a b', 1)",
+      "shingle_hashes('a b c')", "shingle_hashes('a b c', 2)", "normalize_text(' x ')",
+      "redact_pii('x')", "pii_count('x')", "simhash64('x')",
+      "vec_cosine(array(1.0F), array(1.0F))", "quantized_dot(array(1.0F), array(1.0F))",
+      "heavy_hitters(t, 2) FROM VALUES ('a') AS v(t)",
+      "topk_by_score(s, id, 1) FROM VALUES (1.0D, 1L) AS v(s, id)")
+      .foreach(f => assert(spark.sql(s"SELECT $f").collect().length == 1, f))
+    Seq("try_gunzip()", "lenient_ts('a', 'UTC', 1)", "kpl_deaggregate()",
+      "ngram_jaccard('a')", "shingle_hashes('a', 1, 2)", "normalize_text()",
+      "redact_pii('a', 'b')", "pii_count()", "simhash64('a', 'b')",
+      "vec_cosine(array(1.0F))", "quantized_dot(array(1.0F))", "heavy_hitters('a')",
+      "topk_by_score(1.0D, 1L)").foreach { f =>
+      val e = intercept[Exception](spark.sql(s"SELECT $f").collect())
+      assert(e.getMessage.contains("argument(s); usage:"), s"$f: ${e.getMessage}")
+    }
+    val e = intercept[Exception](spark.sql("SELECT shingle_hashes('a b', 'x')").collect())
+    assert(e.getMessage.contains("shingle_hashes expects a literal int"), e.getMessage)
+  }
+
   test("batch log_id dedup keeps one record per (route, id), passes id-less through") {
     val spark = SparkTestSession.spark
     import spark.implicits._

@@ -604,9 +604,13 @@ class OpsSpec extends AnyFunSuite {
       assert(loaded.centroids.sameElements(index.centroids))
       assert(ranked(loaded) == batched)
       // the loaded assignment is a parquet scan — the corpus-sized
-      // nearest-centroid pass is NOT re-run
+      // nearest-centroid pass is NOT re-run (the built index's plan shows
+      // the kernel call, so its absence below is not vacuous)
+      val assignCall = "VecKernel.nearestCentroid("
+      val built = index.assigned.queryExecution.sparkPlan.toString
+      assert(built.contains(assignCall), built)
       val p = loaded.assigned.queryExecution.sparkPlan.toString
-      assert(p.contains("assigned.parquet") && !p.contains("nearest_centroid"), p)
+      assert(p.contains("assigned.parquet") && !p.contains(assignCall), p)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
@@ -5189,11 +5193,15 @@ class OpsSpec extends AnyFunSuite {
 
     // shingle_strings == array_distinct/transform/concat_ws dag
     locally {
+      // trailing non-space whitespace survives trim, so split keeps a
+      // trailing "" token
+      val rows = both.unionByName(Seq(
+        (1000012L, "a b\t"), (1000013L, "x\n"), (1000014L, "\t")).toDF("id", "s"))
       val toks = split(lower(trim(col("s"))), "\\s+")
-      val dag = both.select(col("id"), array_distinct(
+      val dag = rows.select(col("id"), array_distinct(
         transform(sequence(lit(0), greatest(size(toks) - 3, lit(0))),
           i => concat_ws(" ", slice(toks, i + 1, lit(3))))).as("g"))
-      val ker = both.select(col("id"), gfn.shingle_strings(col("s"), 3).as("g"))
+      val ker = rows.select(col("id"), gfn.shingle_strings(col("s"), 3).as("g"))
       val bad = ker.alias("k").join(dag.alias("d"), Seq("id"))
         .where(!(col("k.g") <=> col("d.g")))
       assert(bad.isEmpty,
