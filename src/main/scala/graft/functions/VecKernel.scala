@@ -123,6 +123,12 @@ object VecKernel {
     acc
   }
 
+  /** UnsafeArrayData reads past its end unchecked: refuse a short vector. */
+  private def requireDim(kernel: String, qv: ArrayData, dim: Int): Unit =
+    if (qv.numElements() < dim)
+      throw new IllegalArgumentException(
+        s"$kernel: vector has ${qv.numElements()} elements, expected at least $dim")
+
   /** Nearest centroid on the integer LATTICE (exact k-means assignment,
     * ops/Cluster): input is the pre-quantized long array, centroids are
     * flattened row-major (k × dim) longs. Returns `dist2 * 65536 + j` —
@@ -134,6 +140,7 @@ object VecKernel {
     * scale ~2.3e5 at dim 64; k <= 65536.
     */
   def latticeNearest(qv: ArrayData, cents: Array[Long], k: Int, dim: Int): Long = {
+    requireDim("lattice_nearest", qv, dim)
     var best = Long.MaxValue
     var j = 0
     while (j < k) {
@@ -163,6 +170,7 @@ object VecKernel {
   def latticeNearestPruned(qv: ArrayData, cents: Array[Long], k: Int, dim: Int,
                            superOf: Array[Int], superCents: Array[Long],
                            nSuper: Int, nProbe: Int): Long = {
+    requireDim("lattice_nearest_pruned", qv, dim)
     // rank supers by packed (dist2, id): selection of nProbe best
     val superPacked = new Array[Long](nSuper)
     var s = 0
@@ -327,10 +335,7 @@ object VecKernel {
     * transform+slice pair evaluated interpreted per subvector.
     */
   def subvectors(qv: ArrayData, nSub: Int, subDim: Int): ArrayData = {
-    // UnsafeArrayData reads past its end unchecked
-    if (qv.numElements() < nSub * subDim)
-      throw new IllegalArgumentException(
-        s"subvectors: vector has ${qv.numElements()} elements, expected at least ${nSub * subDim}")
+    requireDim("subvectors", qv, nSub * subDim)
     val rows = new Array[Any](nSub)
     var s = 0
     while (s < nSub) {

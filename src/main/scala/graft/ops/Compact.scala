@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{SaveMode, SparkSession}
+
+import graft.pipeline.LogPipeline
 
 /** Small-files compaction for the routed log output — the operational
   * companion to a micro-batch sink: every batch writes ≥1 object per
@@ -22,16 +23,7 @@ object Compact {
     * log_type=/month=/day= dirs) into `dstRoot` with consolidated files.
     */
   def run(spark: SparkSession, srcRoot: String, dstRoot: String,
-          maxRecordsPerFile: Long = 5000000L): Unit = {
-    spark.read
-      .option("basePath", srcRoot)
-      .text(srcRoot)
-      .hint("rebalance", col("log_type"), col("month"), col("day"))
-      .write
-      .partitionBy("log_type", "month", "day")
-      .option("compression", "gzip")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .mode("overwrite")
-      .text(dstRoot)
-  }
+          maxRecordsPerFile: Long = 5000000L): Unit =
+    LogPipeline.writeRouted(spark.read.option("basePath", srcRoot).text(srcRoot),
+      dstRoot, SaveMode.Overwrite, maxRecordsPerFile)
 }

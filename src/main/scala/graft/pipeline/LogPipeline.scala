@@ -1,11 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.PipelineConfig
 import graft.functions.gfn
+import graft.io.ForkFreeLocalFileSystem
 
 /** The reference's entire data path (SURVEY.md §3.1), re-expressed as narrow
   * Spark transformations — one shuffle-free stage from source to the write
@@ -42,9 +43,13 @@ object LogPipeline {
       .withColumn("payload_bin", gfn.try_gunzip(col("payload_bin")))
       .filter(col("payload_bin").isNotNull)
       .withColumn("payload_str", col("payload_bin").cast(StringType))
+      // the envelope is parsed once, as its own column: inlined into the
+      // explode's branches, the optimizer prunes it into one from_json per
+      // field read and the Generate loses whole-stage codegen
+      .withColumn("_cwl", from_json(col("payload_str"), cwlSchema))
     // O5: CWL envelope unwrap — DATA_MESSAGE explodes logEvents[*].message,
     // CONTROL_MESSAGE yields nothing, anything else passes through as-is.
-    val cwl = from_json(col("payload_str"), cwlSchema)
+    val cwl = col("_cwl")
     val fanned = when(
         cwl.isNotNull && cwl.getField("messageType") === "DATA_MESSAGE" &&
           cwl.getField("logEvents").isNotNull,
@@ -129,18 +134,32 @@ object LogPipeline {
     * partitions, so one hot log_type/day can't funnel terabytes through a
     * single task at 100 TB. maxRecordsPerFile bounds file size either way.
     */
-  def write(parsed: DataFrame, cfg: PipelineConfig, outRoot: String): Unit = {
-    parsed
-      .filter(col("kept"))
-      .select(col("raw").as("value"), col("route").as("log_type"), col("month"), col("day"))
+  def write(parsed: DataFrame, cfg: PipelineConfig, outRoot: String): Unit =
+    writeRouted(
+      parsed.filter(col("kept"))
+        .select(col("raw").as("value"), col("route").as("log_type"), col("month"), col("day")),
+      s"$outRoot/${cfg.pathPrefix}", SaveMode.Append)
+
+  /** The partitioned gzip text write of [[write]] and ops/Compact: `rows`
+    * holds `value` plus the log_type/month/day partition columns.
+    *
+    * On `file:` paths the write goes through [[ForkFreeLocalFileSystem]],
+    * set as Hadoop keys in the writer options: Spark copies them into the
+    * write job's conf, for the job commit and for the tasks (create,
+    * mkdirs), and nowhere else. Other schemes (s3a, hdfs) never read them.
+    */
+  def writeRouted(rows: DataFrame, path: String, mode: SaveMode,
+                  maxRecordsPerFile: Long = 5000000L): Unit =
+    rows
       .hint("rebalance", col("log_type"), col("month"), col("day"))
       .write
       .partitionBy("log_type", "month", "day")
       .option("compression", "gzip")
-      .option("maxRecordsPerFile", 5000000)
-      .mode("append")
-      .text(s"$outRoot/${cfg.pathPrefix}")
-  }
+      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .option("fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .option("fs.file.impl.disable.cache", "true")
+      .mode(mode)
+      .text(path)
 
   /** Extension beyond reference parity (SURVEY.md §2.1 O15 note): the
     * reference's at-least-once retries can duplicate records; since records

@@ -230,6 +230,27 @@ class KernelParitySpec extends AnyFunSuite {
     }
   }
 
+  test("lattice_nearest and lattice_nearest_pruned refuse a short vector") {
+    val short = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      .fromPrimitiveArray(Array(1L))
+    val (superOf, superCents) = (Array(0, 1, 0), Array.tabulate(8)(i => (i % 3 - 1).toLong * 4))
+    val e1 = intercept[IllegalArgumentException](
+      graft.functions.VecKernel.latticeNearest(short, centsL, 3, 4))
+    assert(e1.getMessage == "lattice_nearest: vector has 1 elements, expected at least 4")
+    val e2 = intercept[IllegalArgumentException](graft.functions.VecKernel
+      .latticeNearestPruned(short, centsL, 3, 4, superOf, superCents, 2, 1))
+    assert(e2.getMessage == "lattice_nearest_pruned: vector has 1 elements, expected at least 4")
+    // lv cycles through lengths 0..4: both paths stop on the first short row
+    for (conf <- Seq(Nil, interpreted); (name, k) <- Seq(
+        "lattice_nearest" -> gfn.lattice_nearest(col("lv"), centsL, 3, 4),
+        "lattice_nearest_pruned" ->
+          gfn.lattice_nearest_pruned(col("lv"), centsL, 3, 4, superOf, superCents, 2, 1))) {
+      val err = intercept[Exception](withConf(conf: _*)(input(nullable = true).select(k).collect()))
+      assert(err.getMessage.matches(
+        s"(?s).*$name: vector has [0-3] elements, expected at least 4.*"), err.getMessage)
+    }
+  }
+
   test("whole-stage code calls the kernel methods directly") {
     val df = input(nullable = true).select(
       gfn.try_gunzip(col("bin")), gfn.lenient_ts(col("s")), gfn.shingle_hashes(col("s")))

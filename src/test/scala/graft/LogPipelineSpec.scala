@@ -1,5 +1,11 @@
 package graft
 
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
 
@@ -58,6 +64,14 @@ class LogPipelineSpec extends AnyFunSuite {
     val data =
       """{"messageType":"DATA_MESSAGE","logEvents":[{"id":"1","timestamp":1,"message":"m1"}]}"""
     assert(decodeAll(Seq(GzipUtil.gzip(data.getBytes("UTF-8")))) == Seq("m1"))
+  }
+
+  test("decode parses the CWL envelope once") {
+    val plan = LogPipeline.decode(Seq(Array[Byte](1)).toDF("data")).queryExecution.executedPlan
+    val parses = plan.collect { case p => p.expressions.flatMap(_.collect {
+      case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j })
+    }.flatten
+    assert(parses.size == 1, plan.toString)
   }
 
   // ---- parse stage (O6–O12), fixtures F2/F3 ----
@@ -199,6 +213,68 @@ class LogPipelineSpec extends AnyFunSuite {
     val lines = spark.read.text(s"$tmp/compacted")
       .select("value").as[String].collect().toSet
     assert(lines == (0 until 3).map(mk).toSet)
+  }
+
+  // ---- the fork-free local file system of the write ----
+
+  /** Every path under `root` (relative, part-file names made generic) with
+    * its POSIX permissions.
+    */
+  private def permissions(root: String): Set[(String, String)] = {
+    val base = java.nio.file.Paths.get(root)
+    val walk = Files.walk(base)
+    try walk.iterator().asScala.map { p =>
+      base.relativize(p).toString.replaceAll("part-[0-9a-f-]+(\\.c\\d+)?", "part") ->
+        java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    }.toSet
+    finally walk.close()
+  }
+
+  test("pipeline write leaves the same permissions as a stock write on every path") {
+    val tmp = Files.createTempDirectory("graft-perm").toString
+    val parsed = LogPipeline.parse(Seq(
+      """{"log_type":"app","log_id":"1","time":"2026-08-12T01:00:00Z"}""",
+      """{"log_type":"nginx","log_id":"2","time":"2026-08-13T00:00:00Z"}""",
+      """{"log_id":"3","time":"2026-08-12T00:00:00Z"}""").toDF("payload"), cfg)
+    LogPipeline.write(parsed, cfg, s"$tmp/graft")
+    parsed.filter(col("kept"))
+      .select(col("raw").as("value"), col("route").as("log_type"), col("month"), col("day"))
+      .write.partitionBy("log_type", "month", "day").option("compression", "gzip")
+      .text(s"$tmp/stock/${cfg.pathPrefix}")
+    val forkFree = permissions(s"$tmp/graft/${cfg.pathPrefix}")
+    assert(forkFree == permissions(s"$tmp/stock/${cfg.pathPrefix}"))
+    val names = forkFree.map(_._1)
+    for (kind <- Seq("log_type=app", "log_type=app/month=2026-08/day=12", "part.txt.gz",
+        ".part.txt.gz.crc", "_SUCCESS", "._SUCCESS.crc"))
+      assert(names.exists(_.endsWith(kind)), s"no $kind in $names")
+  }
+
+  test("fork-free setPermission sets plain modes itself and leaves the sticky bit to Hadoop") {
+    val dir = Files.createTempDirectory("graft-sticky")
+    val fs = new graft.io.ForkFreeLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    for (octal <- Seq("750", "1755")) { // NIO cannot set the sticky bit: only super keeps it
+      val mode = Integer.parseInt(octal, 8)
+      fs.setPermission(new Path(dir.toUri), new FsPermission(mode.toShort))
+      assert((Files.getAttribute(dir, "unix:mode").asInstanceOf[Int] & 0xfff) == mode, octal)
+    }
+  }
+
+  test("pipeline write goes through the fork-free file system and leaves the JVM-wide one as it was") {
+    val uri = java.net.URI.create("file:///")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val before = FileSystem.get(uri, conf).getClass
+    // the fork-free instances count their bytes under their own class
+    @scala.annotation.nowarn("cat=deprecation")
+    val forkFree = FileSystem.getStatistics("file", classOf[graft.io.ForkFreeRawLocalFileSystem])
+    val written = forkFree.getBytesWritten
+    val tmp = Files.createTempDirectory("graft-fscache").toString
+    LogPipeline.run(Seq("""{"log_type":"app","log_id":"1","time":"2026-08-12T01:00:00Z"}""")
+      .map(_.getBytes("UTF-8")).toDF("data"), cfg, tmp)
+    assert(forkFree.getBytesWritten > written)
+    assert(before != classOf[graft.io.ForkFreeLocalFileSystem])
+    assert(FileSystem.get(uri, conf).getClass == before)
+    assert(conf.get("fs.file.impl") == null)
   }
 
   test("property: every kept record lands in exactly one route (seeded corpus)") {
