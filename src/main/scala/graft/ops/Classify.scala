@@ -30,6 +30,12 @@ object Classify {
   private def ln12(x: Column): Column =
     (log(x).cast(Dec1812) * lit(1000000000000L).cast(Dec130)).cast("long")
 
+  /** One row `n`: Σ ndocs over [[naiveBayes]]'s per-class doc counts, the
+    * train-row count — 0, not the null of an empty sum, when nothing trains.
+    */
+  private[graft] def trainCount(classDocs: DataFrame): DataFrame =
+    classDocs.agg(coalesce(sum(col("ndocs")), lit(0L)).as("n"))
+
   /** Train on `trainGate` rows, score EVERY row. Output: (id, label,
     * is_train, pred, score12) — `pred` the argmax class (ties to the
     * lexicographically greatest, the max-struct order), `score12` its
@@ -66,7 +72,7 @@ object Classify {
     // r12: Σ ndocs == the train-row count (every train row lands in
     // exactly one label group, null included) — derived from the tiny
     // per-class frame instead of a THIRD corpus scan + spread shuffle
-    val nTrain = classDocs.agg(sum(col("ndocs")).as("n"))
+    val nTrain = trainCount(classDocs)
     // per-class frame with prior12 and the unseen-bucket likelihood zl12
     // (ln of the Laplace floor 1/(ctok+B)) — the COALESCE default for
     // buckets the class never saw in training

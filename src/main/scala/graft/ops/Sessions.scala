@@ -123,16 +123,20 @@ object Sessions {
     // pass: term_i = reward_{t+i} · 2^{-i} in ascending-i fold order, the
     // exact FP sequence of the old fold (array_sort over the ROWS frame
     // ordered the structs by (ord, reward), which the window order below
-    // replays; missing leads add +0.0, which cannot flip any reachable
-    // partial sum — terms are never −0.0, and x + (−x) is +0.0 in IEEE —
-    // OpsSpec pins the dyadic targets and a corpus replay of the old dag).
+    // replays; leads past the trajectory's end (offset ≥ n_future) add
+    // +0.0, which cannot flip any reachable partial sum — terms are never
+    // −0.0, and x + (−x) is +0.0 in IEEE — while a null reward inside the
+    // frame makes `ret` null, as it did in the old fold. OpsSpec pins the
+    // dyadic targets and a corpus replay of the old dag, null rewards
+    // included).
     val wOrd = Window.partitionBy(col("traj_id"))
       .orderBy(col("ord"), col("reward"))
     val wFrame = wOrd.rowsBetween(Window.currentRow, horizon - 1)
     val terms = (0 until horizon).map { i =>
+      // lead's default stands in only for rows past the partition end
       val r = if (i == 0) col("reward")
-        else lead(col("reward"), i).over(wOrd)
-      coalesce(r.cast("double") * lit(weights(i)), lit(0.0))
+        else lead(col("reward"), i, 0L).over(wOrd)
+      r.cast("double") * lit(weights(i))
     }
     events
       .select(traj.cast("long").as("traj_id"), ord.cast("long").as("ord"),

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -38,15 +40,16 @@ object LogPipeline {
     val passthrough = df.columns.filterNot(_ == dataCol).toIndexedSeq.map(col)
     // O3: KPL aggregate → user records (generator; plain records pass through)
     val deagg = df.select(passthrough :+ gfn.kpl_deaggregate(col(dataCol)).as("payload_bin"): _*)
-    // O4: per-value gzip sniff+inflate (corrupt → null → dropped)
+    // O4: per-value gzip sniff+inflate (corrupt → null → a null payload,
+    // dropped after the explode: a filter here would be pushed under the
+    // projection and inflate every record twice)
     val inflated = deagg
-      .withColumn("payload_bin", gfn.try_gunzip(col("payload_bin")))
-      .filter(col("payload_bin").isNotNull)
-      .withColumn("payload_str", col("payload_bin").cast(StringType))
-      // the envelope is parsed once, as its own column: inlined into the
-      // explode's branches, the optimizer prunes it into one from_json per
-      // field read and the Generate loses whole-stage codegen
-      .withColumn("_cwl", from_json(col("payload_str"), cwlSchema))
+      .select(passthrough :+ gfn.try_gunzip(col("payload_bin")).cast(StringType).as("payload_str"): _*)
+    // the envelope is parsed once, as its own column: inlined into the
+    // explode's branches, the optimizer prunes it into one from_json per
+    // field read and the Generate loses whole-stage codegen
+    val enveloped = inflated.select(passthrough ++ Seq(col("payload_str"),
+      from_json(col("payload_str"), cwlSchema).as("_cwl")): _*)
     // O5: CWL envelope unwrap — DATA_MESSAGE explodes logEvents[*].message,
     // CONTROL_MESSAGE yields nothing, anything else passes through as-is.
     val cwl = col("_cwl")
@@ -57,7 +60,7 @@ object LogPipeline {
       .when(cwl.isNotNull && cwl.getField("messageType") === "CONTROL_MESSAGE",
         array().cast(ArrayType(StringType)))
       .otherwise(array(col("payload_str")))
-    inflated
+    enveloped
       .select(passthrough :+ explode(fanned).as("payload"): _*)
       .filter(col("payload").isNotNull)
   }
@@ -82,19 +85,18 @@ object LogPipeline {
     */
   def parse(df: DataFrame, cfg: PipelineConfig, payloadCol: String = "payload"): DataFrame = {
     val raw = col(payloadCol)
+    // Built in a few projections: every Dataset call re-runs the analyzer
+    // over the whole plan, and a stream rebuilds this frame per micro-batch.
     // O6: single JSON parse into a variant; null ⇒ malformed ⇒ drop.
     // Field extraction via variant paths (non-object ⇒ all nulls ⇒ failed).
-    val v = try_parse_json(raw)
     val getS = (field: String) => try_variant_get(col("_v"), s"$$.$field", "string")
-
     val withFields = df
-      .withColumn("_v", v)
-      .withColumn("raw", raw)
-      .withColumn("log_type", getS(cfg.logTypeField))
-      .withColumn("log_id", getS(cfg.logIdField))
-      .withColumn("_time_str", getS(cfg.timestampField))
-      // O9: dateutil-grade parse; zone-less formats read in cfg.timezone.
-      .withColumn("ts", gfn.lenient_ts(col("_time_str"), cfg.timezone))
+      .withColumns(ListMap("_v" -> try_parse_json(raw), "raw" -> raw))
+      .withColumns(ListMap(
+        "log_type" -> getS(cfg.logTypeField),
+        "log_id" -> getS(cfg.logIdField),
+        // O9: dateutil-grade parse; zone-less formats read in cfg.timezone.
+        "ts" -> gfn.lenient_ts(getS(cfg.timestampField), cfg.timezone)))
 
     // O7: required-field validation.
     val tsOk = if (cfg.timestampRequired) col("ts").isNotNull else lit(true)
@@ -111,13 +113,14 @@ object LogPipeline {
     val local = from_utc_timestamp(tsForPath, cfg.timezone)
 
     withFields
-      .withColumn("valid", valid)
-      .withColumn("kept", col("_v").isNotNull && wlOk)
-      // O12: two-way route as a single column (valid → type, failed → unknown)
-      .withColumn("route", when(valid, col("log_type")).otherwise(lit(cfg.unknownPrefix)))
-      .withColumn("month", date_format(local, "yyyy-MM"))
-      .withColumn("day", date_format(local, "dd"))
-      .drop("_v", "_time_str")
+      .withColumns(ListMap(
+        "valid" -> valid,
+        "kept" -> (col("_v").isNotNull && wlOk),
+        // O12: two-way route as a single column (valid → type, failed → unknown)
+        "route" -> when(valid, col("log_type")).otherwise(lit(cfg.unknownPrefix)),
+        "month" -> date_format(local, "yyyy-MM"),
+        "day" -> date_format(local, "dd")))
+      .drop("_v")
   }
 
   /** O11+O13+O14: one partitioned gzip write for both routes (valid records

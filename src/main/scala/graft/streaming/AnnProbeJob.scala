@@ -32,12 +32,8 @@ object AnnProbeJob {
             nProbe: Int = 4,
             trigger: Trigger = Trigger.AvailableNow())
            (implicit spark: SparkSession): StreamingQuery = {
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        outSink(Similarity.ivfProbe(index, batch, k, nProbe))
-      }
-      .start()
+    PerBatch.start(queries, checkpointDir, trigger) { (batch, _) =>
+      outSink(Similarity.ivfProbe(index, batch, k, nProbe))
+    }
   }
 }

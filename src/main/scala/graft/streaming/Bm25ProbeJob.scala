@@ -32,12 +32,8 @@ object Bm25ProbeJob {
             k: Int = 10,
             trigger: Trigger = Trigger.AvailableNow())
            (implicit spark: SparkSession): StreamingQuery = {
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        outSink(TextOps.bm25Probe(index, batch, k))
-      }
-      .start()
+    PerBatch.start(queries, checkpointDir, trigger) { (batch, _) =>
+      outSink(TextOps.bm25Probe(index, batch, k))
+    }
   }
 }

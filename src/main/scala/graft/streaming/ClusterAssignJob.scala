@@ -31,12 +31,8 @@ object ClusterAssignJob {
             scale: Int = 1000,
             trigger: Trigger = Trigger.AvailableNow())
            (implicit spark: SparkSession): StreamingQuery = {
-    embStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        outSink(Cluster.assign(batch, idCol, vecCol, centroids, scale))
-      }
-      .start()
+    PerBatch.start(embStream, checkpointDir, trigger) { (batch, _) =>
+      outSink(Cluster.assign(batch, idCol, vecCol, centroids, scale))
+    }
   }
 }

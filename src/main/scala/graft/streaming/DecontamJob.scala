@@ -29,12 +29,8 @@ object DecontamJob {
             w: Int = 5,
             trigger: Trigger = Trigger.AvailableNow())
            (implicit spark: SparkSession): StreamingQuery = {
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        outSink(Decontam.overlapReport(batch, evalDocs, w))
-      }
-      .start()
+    PerBatch.start(docs, checkpointDir, trigger) { (batch, _) =>
+      outSink(Decontam.overlapReport(batch, evalDocs, w))
+    }
   }
 }

@@ -51,32 +51,27 @@ object EmbedDriftJob {
       new java.util.concurrent.atomic.AtomicReference[graft.ops.Caches.Checkpointed](null)
     @volatile var init = initialMoments // consumed by the first trigger
     @volatile var lastMerged = initialBatchId
-    emb.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastMerged) {
-          val batchMoments = LinAlg.secondMoments(batch, vecCol, dim, scale)
-          val base = Option(cpRef.get()).map(_.df).orElse(init)
-          val merged = base
-            .map(st => LinAlg.mergeMoments(st, batchMoments))
-            .getOrElse(batchMoments)
-          // dim²-row state, lineage-cut per trigger; round N released the
-          // moment N+1 is stored (the Caches loop contract)
-          val next = graft.ops.Caches.checkpoint(merged)
-          val prev = cpRef.getAndSet(next)
-          if (prev != null) prev.release()
-          init = None
-          lastMerged = batchId
-        }
-        val cur: DataFrame = Option(cpRef.get()).map(_.df).orElse(init)
-          .getOrElse(spark.range(0).selectExpr("0 as i", "0 as j",
-            "cast(0 as long) as n", "cast(0 as long) as s_ij",
-            "cast(0 as long) as s_i", "cast(0 as long) as s_j"))
-        momentsSink.foreach(sink => sink(lastMerged, cur))
-        outSink(LinAlg.covarianceFromMoments(cur))
-        ()
+    PerBatch.start(emb, checkpointDir, trigger) { (batch, batchId) =>
+      if (batchId > lastMerged) {
+        val batchMoments = LinAlg.secondMoments(batch, vecCol, dim, scale)
+        val base = Option(cpRef.get()).map(_.df).orElse(init)
+        val merged = base
+          .map(st => LinAlg.mergeMoments(st, batchMoments))
+          .getOrElse(batchMoments)
+        // dim²-row state, lineage-cut per trigger; round N released the
+        // moment N+1 is stored (the Caches loop contract)
+        val next = graft.ops.Caches.checkpoint(merged)
+        val prev = cpRef.getAndSet(next)
+        if (prev != null) prev.release()
+        init = None
+        lastMerged = batchId
       }
-      .start()
+      val cur: DataFrame = Option(cpRef.get()).map(_.df).orElse(init)
+        .getOrElse(spark.range(0).selectExpr("0 as i", "0 as j",
+          "cast(0 as long) as n", "cast(0 as long) as s_ij",
+          "cast(0 as long) as s_i", "cast(0 as long) as s_j"))
+      momentsSink.foreach(sink => sink(lastMerged, cur))
+      outSink(LinAlg.covarianceFromMoments(cur))
+    }
   }
 }

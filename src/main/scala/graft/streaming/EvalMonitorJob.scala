@@ -61,37 +61,32 @@ object EvalMonitorJob {
     // batch id at most once makes the retry re-emit from unchanged state;
     // initialBatchId extends the guard across a JVM restart.
     @volatile var lastMerged = initialBatchId
-    scored.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastMerged) {
-          val batchCells = Eval.confusionCells(batch, col("pred"), col("gold"))
-          val base = Option(cpRef.get()).map(_.df).orElse(init)
-          val merged = base
-            .map(st => Eval.mergeConfusionCells(st, batchCells))
-            .getOrElse(batchCells)
-          // C²-cell state, lineage-cut per trigger; round N released the
-          // moment N+1 is stored (the Caches loop contract)
-          val next = graft.ops.Caches.checkpoint(merged)
-          val prev = cpRef.getAndSet(next)
-          if (prev != null) prev.release()
-          init = None
-          lastMerged = batchId
-        }
-        // raw state first: offsets commit after foreachBatch returns, so a
-        // crash in outSink replays the batch — the guard above keeps the
-        // replayed merge a no-op, and the persisted snapshot (not an
-        // increment) stays exact under latest-wins overwrite. The
-        // rehydrated-skip path (guard fired on the very first batch) emits
-        // straight from initialCells.
-        val cur: DataFrame = Option(cpRef.get()).map(_.df).orElse(init)
-          .getOrElse(spark.range(0).select(lit("").as("pred"),
-            lit("").as("gold"), lit(0L).as("n")))
-        cellsSink.foreach(sink => sink(lastMerged, cur))
-        outSink(Eval.confusionFromCells(cur))
-        ()
+    PerBatch.start(scored, checkpointDir, trigger) { (batch, batchId) =>
+      if (batchId > lastMerged) {
+        val batchCells = Eval.confusionCells(batch, col("pred"), col("gold"))
+        val base = Option(cpRef.get()).map(_.df).orElse(init)
+        val merged = base
+          .map(st => Eval.mergeConfusionCells(st, batchCells))
+          .getOrElse(batchCells)
+        // C²-cell state, lineage-cut per trigger; round N released the
+        // moment N+1 is stored (the Caches loop contract)
+        val next = graft.ops.Caches.checkpoint(merged)
+        val prev = cpRef.getAndSet(next)
+        if (prev != null) prev.release()
+        init = None
+        lastMerged = batchId
       }
-      .start()
+      // raw state first: offsets commit after foreachBatch returns, so a
+      // crash in outSink replays the batch — the guard above keeps the
+      // replayed merge a no-op, and the persisted snapshot (not an
+      // increment) stays exact under latest-wins overwrite. The
+      // rehydrated-skip path (guard fired on the very first batch) emits
+      // straight from initialCells.
+      val cur: DataFrame = Option(cpRef.get()).map(_.df).orElse(init)
+        .getOrElse(spark.range(0).select(lit("").as("pred"),
+          lit("").as("gold"), lit(0L).as("n")))
+      cellsSink.foreach(sink => sink(lastMerged, cur))
+      outSink(Eval.confusionFromCells(cur))
+    }
   }
 }

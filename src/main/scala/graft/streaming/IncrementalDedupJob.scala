@@ -34,15 +34,11 @@ object IncrementalDedupJob {
             threshold: Double = 0.5,
             trigger: Trigger = Trigger.AvailableNow())
            (implicit spark: SparkSession): StreamingQuery = {
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val hits = Dedup.minhashProbe(index, batch, threshold)
-        outSink(batch.join(hits, batch("doc_id") === hits("new_id"), "left")
-          .select(batch("doc_id"), batch("text"), hits("dup_of"), hits("jaccard")))
-      }
-      .start()
+    PerBatch.start(docs, checkpointDir, trigger) { (batch, _) =>
+      val hits = Dedup.minhashProbe(index, batch, threshold)
+      outSink(batch.join(hits, batch("doc_id") === hits("new_id"), "left")
+        .select(batch("doc_id"), batch("text"), hits("dup_of"), hits("jaccard")))
+    }
   }
 
   /** Rolling variant: after probing, each micro-batch is FOLDED into the
@@ -65,23 +61,18 @@ object IncrementalDedupJob {
                   (implicit spark: SparkSession): StreamingQuery = {
     // foreachBatch triggers run sequentially, so a plain ref is race-free
     val indexRef = new java.util.concurrent.atomic.AtomicReference(initialIndex)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val snap = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        snap.count()
-        val index = indexRef.get()
-        val hits = Dedup.minhashProbe(index, snap, threshold)
-        outSink(snap.join(hits, snap("doc_id") === hits("new_id"), "left")
-          .select(snap("doc_id"), snap("text"), hits("dup_of"), hits("jaccard")))
-        indexRef.set(Dedup.minhashIndexMerge(index, snap))
-        // the merge materialized its increment eagerly, so the raw batch
-        // snapshot is garbage now — without this a long-running stream
-        // pins one batch-sized cache per trigger, forever
-        snap.unpersist(blocking = false)
-        ()
-      }
-      .start()
+    PerBatch.start(docs, checkpointDir, trigger) { (batch, _) =>
+      val snap = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      snap.count()
+      val index = indexRef.get()
+      val hits = Dedup.minhashProbe(index, snap, threshold)
+      outSink(snap.join(hits, snap("doc_id") === hits("new_id"), "left")
+        .select(snap("doc_id"), snap("text"), hits("dup_of"), hits("jaccard")))
+      indexRef.set(Dedup.minhashIndexMerge(index, snap))
+      // the merge materialized its increment eagerly, so the raw batch
+      // snapshot is garbage now — without this a long-running stream
+      // pins one batch-sized cache per trigger, forever
+      snap.unpersist(blocking = false)
+    }
   }
 }

@@ -35,12 +35,8 @@ object LmScoreJob {
             checkpointDir: String,
             trigger: Trigger = Trigger.AvailableNow())
            (implicit spark: SparkSession): StreamingQuery = {
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        outSink(TextOps.scoreBigramLm(batch, col("doc_id"), col("text"), lm))
-      }
-      .start()
+    PerBatch.start(docs, checkpointDir, trigger) { (batch, _) =>
+      outSink(TextOps.scoreBigramLm(batch, col("doc_id"), col("text"), lm))
+    }
   }
 }

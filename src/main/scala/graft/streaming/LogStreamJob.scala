@@ -25,14 +25,10 @@ object LogStreamJob {
             checkpoint: String,
             trigger: Trigger = Trigger.AvailableNow(),
             dataCol: String = "data"): StreamingQuery = {
-    records.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // one decode+parse pass, one dynamic-partition write for both routes
-        LogPipeline.run(batch.toDF(), cfg, outRoot, dataCol)
-      }
-      .start()
+    PerBatch.start(records, checkpoint, trigger) { (batch, _) =>
+      // one decode+parse pass, one dynamic-partition write for both routes
+      LogPipeline.run(batch, cfg, outRoot, dataCol)
+    }
   }
 
   /** File-source emulation of the Kinesis stream: each line of each file in

@@ -50,34 +50,29 @@ object ProfileMonitorJob {
       new java.util.concurrent.atomic.AtomicReference[graft.ops.Caches.Checkpointed](null)
     @volatile var init = initialCells // consumed by the first trigger
     @volatile var lastMerged = initialBatchId
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastMerged) {
-          val batchCells = Profile.profileCells(batch, cols)
-          val base = Option(cpRef.get()).map(_.df).orElse(init)
-          val merged = base
-            .map(st => Profile.mergeProfileCells(st, batchCells))
-            .getOrElse(batchCells)
-          // cell-table state, lineage-cut per trigger; round N released
-          // the moment N+1 is stored (the Caches loop contract)
-          val next = graft.ops.Caches.checkpoint(merged)
-          val prev = cpRef.getAndSet(next)
-          if (prev != null) prev.release()
-          init = None
-          lastMerged = batchId
-        }
-        // raw state first (the EvalMonitorJob ordering rationale: offsets
-        // commit after foreachBatch returns; the id guard keeps a replay a
-        // no-op and the persisted snapshot exact under latest-wins)
-        val cur: DataFrame = Option(cpRef.get()).map(_.df).orElse(init)
-          .getOrElse(spark.range(0).select(lit("").as("column"),
-            lit("").as("v"), lit(0L).as("m")))
-        cellsSink.foreach(sink => sink(lastMerged, cur))
-        outSink(Profile.profileFromCells(cur))
-        ()
+    PerBatch.start(rows, checkpointDir, trigger) { (batch, batchId) =>
+      if (batchId > lastMerged) {
+        val batchCells = Profile.profileCells(batch, cols)
+        val base = Option(cpRef.get()).map(_.df).orElse(init)
+        val merged = base
+          .map(st => Profile.mergeProfileCells(st, batchCells))
+          .getOrElse(batchCells)
+        // cell-table state, lineage-cut per trigger; round N released
+        // the moment N+1 is stored (the Caches loop contract)
+        val next = graft.ops.Caches.checkpoint(merged)
+        val prev = cpRef.getAndSet(next)
+        if (prev != null) prev.release()
+        init = None
+        lastMerged = batchId
       }
-      .start()
+      // raw state first (the EvalMonitorJob ordering rationale: offsets
+      // commit after foreachBatch returns; the id guard keeps a replay a
+      // no-op and the persisted snapshot exact under latest-wins)
+      val cur: DataFrame = Option(cpRef.get()).map(_.df).orElse(init)
+        .getOrElse(spark.range(0).select(lit("").as("column"),
+          lit("").as("v"), lit(0L).as("m")))
+      cellsSink.foreach(sink => sink(lastMerged, cur))
+      outSink(Profile.profileFromCells(cur))
+    }
   }
 }

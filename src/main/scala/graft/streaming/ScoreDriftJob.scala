@@ -53,31 +53,26 @@ object ScoreDriftJob {
       new java.util.concurrent.atomic.AtomicReference[graft.ops.Caches.Checkpointed](null)
     @volatile var init = initialCounts // consumed by the first trigger
     @volatile var lastMerged = initialBatchId
-    scores.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastMerged) {
-          val batchCounts = Eval.bucketCounts(batch, col(scoreCol), edges)
-          val base = Option(cpRef.get()).map(_.df).orElse(init)
-          val merged = base
-            .map(st => Eval.mergeBucketCounts(st, batchCounts))
-            .getOrElse(batchCounts)
-          // ≤(edges+1)-row state, lineage-cut per trigger; round N is
-          // released the moment N+1 is stored (the Caches loop contract)
-          val next = graft.ops.Caches.checkpoint(merged)
-          val prev = cpRef.getAndSet(next)
-          if (prev != null) prev.release()
-          init = None
-          lastMerged = batchId
-        }
-        val cur: DataFrame = Option(cpRef.get()).map(_.df).orElse(init)
-          .getOrElse(spark.range(0)
-            .selectExpr("cast(0 as long) as bucket", "cast(0 as long) as cnt"))
-        countsSink.foreach(sink => sink(lastMerged, cur))
-        outSink(Eval.driftFromCounts(cur, refCounts, edges))
-        ()
+    PerBatch.start(scores, checkpointDir, trigger) { (batch, batchId) =>
+      if (batchId > lastMerged) {
+        val batchCounts = Eval.bucketCounts(batch, col(scoreCol), edges)
+        val base = Option(cpRef.get()).map(_.df).orElse(init)
+        val merged = base
+          .map(st => Eval.mergeBucketCounts(st, batchCounts))
+          .getOrElse(batchCounts)
+        // ≤(edges+1)-row state, lineage-cut per trigger; round N is
+        // released the moment N+1 is stored (the Caches loop contract)
+        val next = graft.ops.Caches.checkpoint(merged)
+        val prev = cpRef.getAndSet(next)
+        if (prev != null) prev.release()
+        init = None
+        lastMerged = batchId
       }
-      .start()
+      val cur: DataFrame = Option(cpRef.get()).map(_.df).orElse(init)
+        .getOrElse(spark.range(0)
+          .selectExpr("cast(0 as long) as bucket", "cast(0 as long) as cnt"))
+      countsSink.foreach(sink => sink(lastMerged, cur))
+      outSink(Eval.driftFromCounts(cur, refCounts, edges))
+    }
   }
 }

@@ -57,33 +57,28 @@ object SourceOverlapJob {
     val cpRef =
       new java.util.concurrent.atomic.AtomicReference[graft.ops.Caches.Checkpointed](null)
     @volatile var init = initialCells // consumed by the first trigger
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val batchCells = Dedup.sourceSignatureCells(
-          batch, col("source"), col("text"), w, k)
-        val base = Option(cpRef.get()).map(_.df).orElse(init)
-        val merged = base
-          .map(st => Dedup.mergeSignatureCells(st, batchCells))
-          .getOrElse(batchCells)
-        // materialize the G×k-cell state eagerly and cut it from the
-        // batch's lineage: a foreachBatch frame is only valid inside its
-        // own trigger, and the state must outlive it. Round N's blocks are
-        // released the moment round N+1 is stored (the Caches loop
-        // contract), so in-flight cache stays ONE G×k table deep.
-        val next = graft.ops.Caches.checkpoint(merged)
-        val prev = cpRef.getAndSet(next)
-        if (prev != null) prev.release()
-        init = None
-        // raw state first: if outSink throws, the caller still has the
-        // snapshot that includes this batch (offsets commit after
-        // foreachBatch returns, so a crash here replays the batch — min
-        // re-merge is idempotent)
-        cellsSink.foreach(sink => sink(next.df))
-        outSink(Dedup.overlapFromCells(next.df, k))
-        ()
-      }
-      .start()
+    PerBatch.start(docs, checkpointDir, trigger) { (batch, _) =>
+      val batchCells = Dedup.sourceSignatureCells(
+        batch, col("source"), col("text"), w, k)
+      val base = Option(cpRef.get()).map(_.df).orElse(init)
+      val merged = base
+        .map(st => Dedup.mergeSignatureCells(st, batchCells))
+        .getOrElse(batchCells)
+      // materialize the G×k-cell state eagerly and cut it from the
+      // batch's lineage: a foreachBatch frame is only valid inside its
+      // own trigger, and the state must outlive it. Round N's blocks are
+      // released the moment round N+1 is stored (the Caches loop
+      // contract), so in-flight cache stays ONE G×k table deep.
+      val next = graft.ops.Caches.checkpoint(merged)
+      val prev = cpRef.getAndSet(next)
+      if (prev != null) prev.release()
+      init = None
+      // raw state first: if outSink throws, the caller still has the
+      // snapshot that includes this batch (offsets commit after
+      // foreachBatch returns, so a crash here replays the batch — min
+      // re-merge is idempotent)
+      cellsSink.foreach(sink => sink(next.df))
+      outSink(Dedup.overlapFromCells(next.df, k))
+    }
   }
 }

@@ -34,23 +34,18 @@ object SubstringDedupJob {
                   (implicit spark: SparkSession): StreamingQuery = {
     // foreachBatch triggers run sequentially, so a plain ref is race-free
     val indexRef = new java.util.concurrent.atomic.AtomicReference(initialIndex)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // materialize before the merge: a foreachBatch frame is only
-        // guaranteed valid inside its own trigger; the index outlives it
-        val snap = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        snap.count()
-        val index = indexRef.get()
-        val stats = Dedup.substringProbe(index, snap)
-        outSink(snap.join(stats, "doc_id"))
-        indexRef.set(Dedup.substringIndexMerge(index, snap))
-        // merge materialized its novel-gram increment eagerly; drop the
-        // batch snapshot or the stream leaks one cache per trigger
-        snap.unpersist(blocking = false)
-        ()
-      }
-      .start()
+    PerBatch.start(docs, checkpointDir, trigger) { (batch, _) =>
+      // materialize before the merge: a foreachBatch frame is only
+      // guaranteed valid inside its own trigger; the index outlives it
+      val snap = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      snap.count()
+      val index = indexRef.get()
+      val stats = Dedup.substringProbe(index, snap)
+      outSink(snap.join(stats, "doc_id"))
+      indexRef.set(Dedup.substringIndexMerge(index, snap))
+      // merge materialized its novel-gram increment eagerly; drop the
+      // batch snapshot or the stream leaks one cache per trigger
+      snap.unpersist(blocking = false)
+    }
   }
 }

@@ -882,18 +882,29 @@ class OpsSpec extends AnyFunSuite {
     val h16 = Sessions.discountedReturns(ev, col("u"), col("o"), col("r"),
         horizon = 16).orderBy("traj_id", "ord").collect()
     assert(h16.head.getDouble(4) == 1.0 + 2.0 / 2 + 4.0 / 4 + 8.0 / 8)
+    // a null reward nulls every return whose frame holds it; rows past a
+    // trajectory's end still add +0.0
+    val withNull = Seq[(Long, Long, java.lang.Long)](
+      (3L, 1L, 1L), (3L, 2L, null), (3L, 3L, 4L), (3L, 4L, 8L)).toDF("u", "o", "r")
+    assert(Sessions.discountedReturns(withNull, col("u"), col("o"), col("r"), horizon = 2)
+      .orderBy("ord").collect().map(r => Option(r.get(4))).toSeq ==
+      Seq(None, None, Some(4.0 + 8.0 / 2), Some(8.0)))
     // r12 lead()-rewrite pin: bitwise replay of the original
-    // collect_list + array_sort + interpreted-fold dag on corpus events
-    locally {
+    // collect_list + array_sort + interpreted-fold dag on corpus events,
+    // as they are and with every fifth reward null
+    for (nullEvery <- Seq(0, 5)) {
       import org.apache.spark.sql.expressions.Window
       val horizon = 16
       val weights = (0 until horizon).map(i => 1.0 / (1L << i))
       val w = Window.partitionBy(col("traj_id")).orderBy(col("ord"))
         .rowsBetween(Window.currentRow, horizon - 1)
+      val rewardOf = floor(col("value")).cast("long") % 256
+      val reward = if (nullEvery == 0) rewardOf
+        else when(col("event_id") % nullEvery =!= 0, rewardOf)
       val ev2 = Tables(spark, "/root/testdata/sf0.001", "events")
         .select(col("user_id").cast("long").as("traj_id"),
           col("event_id").cast("long").as("ord"),
-          (floor(col("value")).cast("long") % 256).as("reward"))
+          reward.as("reward"))
       val want = ev2
         .withColumn("future",
           collect_list(struct(col("ord"), col("reward"))).over(w))
@@ -906,13 +917,13 @@ class OpsSpec extends AnyFunSuite {
             lit(0.0), (acc, t) => acc + t).as("ret"))
       val got = Sessions.discountedReturns(
         Tables(spark, "/root/testdata/sf0.001", "events"),
-        col("user_id"), col("event_id"),
-        floor(col("value")).cast("long") % 256, horizon = horizon)
+        col("user_id"), col("event_id"), reward, horizon = horizon)
       val bad = got.alias("g").join(want.alias("w"), Seq("traj_id", "ord"))
         .where(!(col("g.n_future") <=> col("w.n_future")) ||
           !(col("g.ret") <=> col("w.ret")))
       assert(bad.isEmpty,
         s"lead-rewrite diverged from the collect_list dag: ${bad.take(3).mkString}")
+      if (nullEvery > 0) assert(got.where(col("ret").isNull).count() > 0)
     }
   }
 
@@ -3220,6 +3231,19 @@ class OpsSpec extends AnyFunSuite {
     val test = out.filter(!_._3)
     assert(test.nonEmpty && test.forall(t => t._4 == t._2),
       s"held-out misclassified: ${test.filter(t => t._4 != t._2).take(3).toSeq}")
+    graft.ops.Caches.drainAll(spark)
+  }
+
+  test("naive Bayes: an empty training set counts 0 train rows and predicts nothing") {
+    val df = Seq((1L, "alpha beta", "A"), (2L, "omicron sigma", "B"))
+      .toDF("doc_id", "text", "cls")
+    val out = graft.ops.Classify.naiveBayes(df, col("text"), col("doc_id"),
+      col("cls"), trainGate = lit(false))
+    assert(out.count() == 0)
+    val noClasses = Seq.empty[(String, Long)].toDF("label", "ndocs")
+    assert(graft.ops.Classify.trainCount(noClasses).head().getLong(0) == 0L)
+    assert(graft.ops.Classify.trainCount(Seq(("A", 3L), (null, 2L)).toDF("label", "ndocs"))
+      .head().getLong(0) == 5L)
     graft.ops.Caches.drainAll(spark)
   }
 

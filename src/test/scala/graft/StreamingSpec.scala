@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, count, expr, lit, sum, unix_micros, window}
 
-import graft.streaming.{CurationStreamJob, LogStreamJob}
+import graft.streaming.{CurationStreamJob, LogStreamJob, PerBatch}
 
 /** O1/O15: micro-batch streaming wrapper — checkpointed foreachBatch over a
   * memory source standing in for the Kinesis connector (SURVEY.md §7.1.6).
@@ -1052,5 +1052,70 @@ class StreamingSpec extends AnyFunSuite {
       assert(r.getAs[String]("top_value") == "x" &&
         r.getAs[Long]("top_freq") == 3L)
     } finally { q2.stop(); graft.ops.Caches.drainAll(spark) }
+  }
+
+  // ---- checkpoint file system (PerBatch) ----
+
+  /** Runs `body` with the session's `fs.AbstractFileSystem.file.impl` set to
+    * `impl` (None: unset, so PerBatch picks), then restores it.
+    */
+  private def withLocalFs[T](impl: Option[String])(body: => T): T = {
+    val key = PerBatch.LocalFsKey
+    val before = spark.conf.getOption(key)
+    def put(v: Option[String]): Unit = v.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    put(impl)
+    try body finally put(before)
+  }
+
+  private def logFile(dir: java.nio.file.Path, name: String, ids: Range): Unit =
+    java.nio.file.Files.write(dir.resolve(name), ids.map(i =>
+      s"""{"log_type":"app","log_id":"$i","time":"2026-08-12T01:00:00Z"}""").mkString("\n")
+      .getBytes("UTF-8"))
+
+  private def writtenIds(out: String): Seq[Int] = {
+    import spark.implicits._
+    spark.read.text(s"$out/${PipelineConfig().pathPrefix}").select("value").as[String].collect().toSeq
+      .map(l => """"log_id":"(\d+)"""".r.findFirstMatchIn(l).get.group(1).toInt).sorted
+  }
+
+  test("a checkpointed LogStreamJob run starts no process from its stream execution thread") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-forks")
+    val in = java.nio.file.Files.createDirectory(tmp.resolve("in"))
+    (0 until 3).foreach(k => logFile(in, s"f-$k.json", k * 10 until k * 10 + 10))
+    val (_, forks) = withLocalFs(None) {
+      Forks.during {
+        val q = LogStreamJob.startFromTextDir(spark, in.toString, PipelineConfig(),
+          s"$tmp/out", s"$tmp/cp", maxFilesPerTrigger = Some(1))
+        q.awaitTermination(60000)
+      }
+    }
+    // three micro-batches, each logged in offsets, commits and the source log
+    assert(new java.io.File(s"$tmp/cp/commits").list().count(_.matches("\\d+")) == 3)
+    assert(writtenIds(s"$tmp/out") == (0 until 30))
+    val onStream = forks.filter(_.getThread.getJavaName.contains("stream execution thread"))
+    assert(onStream.isEmpty, Forks.describe(onStream))
+  }
+
+  test("a checkpoint resumes exactly once across the stock and the fork-free LocalFs, both ways") {
+    val stock = "org.apache.hadoop.fs.local.LocalFs"
+    for ((first, second) <- Seq(Some(stock) -> None, None -> Some(stock))) {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-stream-fs")
+      val in = java.nio.file.Files.createDirectory(tmp.resolve("in"))
+      def run(impl: Option[String]): Unit = withLocalFs(impl) {
+        val q = LogStreamJob.startFromTextDir(spark, in.toString, PipelineConfig(),
+          s"$tmp/out", s"$tmp/cp", maxFilesPerTrigger = Some(1))
+        q.awaitTermination(60000)
+        assert(q.exception.isEmpty)
+        // an explicit choice stands; an unset key gets the fork-free one
+        assert(spark.conf.get(PerBatch.LocalFsKey) ==
+          impl.getOrElse(classOf[graft.io.ForkFreeLocalFs].getName))
+      }
+      logFile(in, "f-0.json", 1 to 3); logFile(in, "f-1.json", 4 to 6)
+      run(first)
+      logFile(in, "f-2.json", 7 to 9)
+      run(second)
+      assert(writtenIds(s"$tmp/out") == (1 to 9), s"$first then $second")
+      assert(new java.io.File(s"$tmp/cp/commits").list().count(_.matches("\\d+")) == 3)
+    }
   }
 }
