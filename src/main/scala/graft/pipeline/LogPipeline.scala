@@ -91,7 +91,9 @@ object LogPipeline {
     // Field extraction via variant paths (non-object ⇒ all nulls ⇒ failed).
     val getS = (field: String) => try_variant_get(col("_v"), s"$$.$field", "string")
     val withFields = df
-      .withColumns(ListMap("_v" -> try_parse_json(raw), "raw" -> raw))
+      // a one-row explode: filters on `_v` (write's `kept`, dedupe's id test)
+      // stay above the Generate instead of being pushed down to re-parse `raw`
+      .withColumns(ListMap("_v" -> explode(array(try_parse_json(raw))), "raw" -> raw))
       .withColumns(ListMap(
         "log_type" -> getS(cfg.logTypeField),
         "log_id" -> getS(cfg.logIdField),
@@ -105,7 +107,7 @@ object LogPipeline {
     // O8: whitelist — empty ⇒ all (documented semantics; see PipelineConfig).
     val wlOk: Column =
       if (cfg.whitelist.isEmpty) lit(true)
-      else col("log_type").isNull || col("log_type").isin(cfg.whitelist: _*)
+      else coalesce(col("log_type").isin(cfg.whitelist: _*), lit(true)) // null type passes
 
     // O10: partition path parts in the configured timezone. Failed records
     // without a parseable ts partition under the deterministic fallback date.
@@ -172,18 +174,21 @@ object LogPipeline {
     * partitioning/ordering (unlike `dropDuplicates`, which keeps an arbitrary
     * copy) and still gets map-side partial aggregation, so the shuffle carries
     * one row per key per partition, not every duplicate. Records without an id
-    * pass through untouched. Requires all columns orderable (no map columns) —
-    * true for every frame `parse` produces.
+    * pass through untouched: they group on the whole row and come back once
+    * per copy, so the input is read (and parsed) once, by one aggregate.
+    * Requires all columns orderable (no map columns) — true for every frame
+    * `parse` produces.
     * Streaming form: `dropDuplicatesWithinWatermark` on the parsed frame —
     * state is bounded by the watermark, so it holds at unbounded scale.
     */
   def dedupeById(parsed: DataFrame): DataFrame = {
-    val allCols = parsed.columns.toIndexedSeq.map(col)
-    val winner = parsed.filter(col("log_id").isNotNull)
-      .groupBy(col("route"), col("log_id"))
-      .agg(min(struct(allCols: _*)).as("_row"))
+    val row = struct(parsed.columns.toIndexedSeq.map(col): _*)
+    val noId = col("log_id").isNull
+    parsed
+      .groupBy(col("route"), col("log_id"), when(noId, row).as("_same"))
+      .agg(min(row).as("_row"), count(lit(1)).as("_n"))
+      .select(col("_row"), explode(sequence(lit(1L), when(noId, col("_n")).otherwise(1L))))
       .select(col("_row.*"))
-    winner.unionByName(parsed.filter(col("log_id").isNull))
   }
 
   def dedupeByIdStreaming(parsed: DataFrame, watermarkDelay: String = "1 hour"): DataFrame = {

@@ -9,9 +9,11 @@ import graft.pipeline.LogPipeline
 /** O1 + O15: the micro-batch driver. The reference's unit of work is one
   * Lambda invocation per ≤batch_size Kinesis records with at-least-once
   * redelivery (/root/reference/main.tf:56-62); here each micro-batch flows
-  * through the same decode→parse→write chain under a checkpoint, which
-  * upgrades delivery to exactly-once (file-sink commit log) — a documented
-  * strengthening, not a divergence (SURVEY.md §2.1 O15).
+  * through the same decode→parse→write chain under a checkpoint. Delivery is
+  * exactly-once across clean stops and restarts. It stays at-least-once
+  * across a crash: the batch appends files under fresh names, so a process
+  * that dies after the write but before `commits/N` writes batch N again on
+  * restart (SURVEY.md §2.1 O15).
   *
   * The source is abstracted as "any streaming DataFrame with a binary
   * `data` column" (SURVEY.md §7.1.6): a Kinesis connector, a file stream,

@@ -2,14 +2,18 @@ package graft
 
 import java.nio.file.Files
 
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
 
-import graft.functions.{GzipUtil, Kpl}
+import graft.functions.{gfn, GzipUtil, Kpl}
 import graft.pipeline.LogPipeline
 
 /** Golden tests for the parity pipeline, driven by FIXTURES.md F1–F7 and the
@@ -275,6 +279,155 @@ class LogPipelineSpec extends AnyFunSuite {
     assert(before != classOf[graft.io.ForkFreeLocalFileSystem])
     assert(FileSystem.get(uri, conf).getClass == before)
     assert(conf.get("fs.file.impl") == null)
+  }
+
+  // ---- one JSON parse per payload on the write ----
+
+  private val wlCfg = cfg.copy(whitelist = Seq("app"))
+  private val valid1 = """{"log_type":"app","log_id":"1","time":"2026-08-12T01:00:00Z"}"""
+  private val valid2 = """{"log_type":"app","log_id":"2","time":"2026-08-12T02:00:00Z"}"""
+  private val noType = """{"log_id":"3","time":"2026-08-12T03:00:00Z"}"""
+  private val badTime = """{"log_type":"app","log_id":"4","time":"not-a-time"}"""
+  private val array = "[1,2]"
+  private val wlMiss = """{"log_type":"debug","log_id":"5","time":"2026-08-12T00:00:00Z"}"""
+
+  /** One record per decode branch (plain, gzip, KPL, corrupt gzip, CWL data
+    * and control message) carrying every parse branch under [[wlCfg]]:
+    * valid, typeless, bad time and non-object (kept), whitelist miss and
+    * non-JSON (dropped).
+    */
+  private def branchFixture = {
+    val b = (s: String) => s.getBytes("UTF-8")
+    val cwlData = s"""{"messageType":"DATA_MESSAGE","logEvents":[{"message":${
+      "\"" + valid2.replace("\"", "\\\"") + "\""}},{"message":"$array"}]}"""
+    Seq(b(valid1), GzipUtil.gzip(b(noType)), Kpl.aggregate(Seq(b(wlMiss), b("not json {{{"))),
+      Array[Byte](0x1f, 0x8b.toByte, 1, 2, 3, 4), b(cwlData),
+      b("""{"messageType":"CONTROL_MESSAGE","logEvents":[]}"""), b(badTime)).toDF("data")
+  }
+  private val branchKept = Set(valid1, valid2, noType, badTime, array)
+
+  private def writtenLines(root: String): Seq[String] =
+    spark.read.text(root).select("value").as[String].collect().toSeq.sorted
+
+  test("the batch write parses each payload's JSON once (plan pin)") {
+    val tmp = Files.createTempDirectory("graft-once").toString
+    val plans = PlanAudit.writePlans(spark, 1) {
+      LogPipeline.run(branchFixture, wlCfg, tmp)
+    }
+    assert(plans.size == 1)
+    PlanAudit.assertParsesOnce(plans.head)
+    assert(writtenLines(s"$tmp/${cfg.pathPrefix}") == branchKept.toSeq.sorted)
+  }
+
+  test("the deduplicating write parses each payload's JSON once and reads its input once") {
+    val tmp = Files.createTempDirectory("graft-once-dedupe").toString
+    val plans = PlanAudit.writePlans(spark, 1) {
+      LogPipeline.run(branchFixture.union(branchFixture), wlCfg, tmp, dedupe = true)
+    }
+    assert(plans.size == 1)
+    PlanAudit.assertParsesOnce(plans.head)
+    // the id-less array passes through once per copy; every id is written once
+    assert(writtenLines(s"$tmp/${cfg.pathPrefix}") == (branchKept.toSeq :+ array).sorted)
+  }
+
+  test("dedupeById returns the rows of the filter-and-union form it replaced") {
+    val rnd = new java.util.Random(7)
+    val inputs = (1 to 400).map { i =>
+      val id = if (rnd.nextInt(4) == 0) "" else s""","log_id":"${rnd.nextInt(40)}""""
+      val tpe = Seq("", ""","log_type":"app"""", ""","log_type":"web"""")(rnd.nextInt(3))
+      // few distinct renderings, so id-less rows repeat byte for byte
+      s"""{"time":"2026-08-1${rnd.nextInt(3)}T00:00:00Z","n":${rnd.nextInt(3)}$tpe$id}"""
+    } ++ Seq(null, "not json", "[1]", "[1]")
+    val parsed = LogPipeline.parse(inputs.toDF("payload"), cfg)
+    val before = {
+      val allCols = parsed.columns.toIndexedSeq.map(col)
+      parsed.filter(col("log_id").isNotNull)
+        .groupBy(col("route"), col("log_id"))
+        .agg(min(struct(allCols: _*)).as("_row"))
+        .select(col("_row.*"))
+        .unionByName(parsed.filter(col("log_id").isNull))
+    }
+    val rows = (df: DataFrame) => df.collect().map(_.toString).toSeq.sorted
+    val after = rows(LogPipeline.dedupeById(parsed))
+    assert(after == rows(before))
+    assert(after.size > inputs.count(p => p == null || !p.contains("log_id")) && after.size < inputs.size)
+  }
+
+  // ---- parse against the projection form it replaced, on edge rows ----
+
+  /** `parse` as it was before the one-row explode: `_v` in a plain
+    * projection (which lets the `kept` filter be pushed under it).
+    */
+  private def parseBefore(df: DataFrame, c: PipelineConfig): DataFrame = {
+    val raw = col("payload")
+    val getS = (field: String) => try_variant_get(col("_v"), s"$$.$field", "string")
+    val withFields = df
+      .withColumns(ListMap("_v" -> try_parse_json(raw), "raw" -> raw))
+      .withColumns(ListMap(
+        "log_type" -> getS(c.logTypeField),
+        "log_id" -> getS(c.logIdField),
+        "ts" -> gfn.lenient_ts(getS(c.timestampField), c.timezone)))
+    val tsOk = if (c.timestampRequired) col("ts").isNotNull else lit(true)
+    val valid = col("log_type").isNotNull && col("log_id").isNotNull && tsOk
+    val wlOk: Column =
+      if (c.whitelist.isEmpty) lit(true)
+      else col("log_type").isNull || col("log_type").isin(c.whitelist: _*)
+    val local = from_utc_timestamp(
+      coalesce(col("ts"), lit(c.fallbackDate).cast(TimestampType)), c.timezone)
+    withFields
+      .withColumns(ListMap(
+        "valid" -> valid,
+        "kept" -> (col("_v").isNotNull && wlOk),
+        "route" -> when(valid, col("log_type")).otherwise(lit(c.unknownPrefix)),
+        "month" -> date_format(local, "yyyy-MM"),
+        "day" -> date_format(local, "dd")))
+      .drop("_v")
+  }
+
+  private val edgePayloads: Seq[String] = {
+    val t = "\"time\":\"2026-08-12T01:00:00Z\""
+    Seq(null, "", "   ", "\t\n",
+      s"""{"log_type":"app","log_id":"1",$t}\t""", s"""{"log_type":"app","log_id":"2",$t}\n""",
+      "not json {{{", "42", "\"app\"", "null", "[1,2]",
+      s"""{"log_type":"app","log_type":"web","log_id":"3",$t}""",   // duplicate key
+      s"""{"log_id":"4",$t}""", s"""{"log_type":"app",$t}""",
+      """{"log_type":"app","log_id":"5"}""",
+      s"""{"log_type":null,"log_id":"6",$t}""",
+      s"""{"log_type":"app","log_id":"ü-日本-7",$t,"m":"héllo 😀"}""",
+      s"""{"log_type":"debug","log_id":"8",$t}""")                  // whitelist miss
+  }
+
+  test("parse matches its projection form row for row on edge rows, " +
+       "codegen and interpreted, whitelist on and off") {
+    // an RDD, not a local relation the optimizer would evaluate itself
+    val in = spark.sparkContext.parallelize(edgePayloads.zipWithIndex.map(_.swap), 2)
+      .toDF("i", "payload")
+    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    def rows(df: DataFrame) = df.orderBy("i").collect().toSeq
+    def both(c: PipelineConfig) = Seq(
+      LogPipeline.parse(in, c) -> parseBefore(in, c),
+      LogPipeline.parse(in, c).filter(col("kept")) -> parseBefore(in, c).filter(col("kept")))
+    for (c <- Seq(cfg, wlCfg); conf <- Seq(Nil, interpreted)) {
+      val old = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try for ((now, before) <- both(c)) {
+        assert(now.columns.toSeq == before.columns.toSeq)
+        assert(now.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec]) ==
+          conf.isEmpty)
+        assert(rows(now) == rows(before), s"${c.whitelist} $conf")
+      } finally old.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    // whitelist on: blank, non-JSON and duplicate-key payloads and the miss
+    // are dropped; JSON scalars, arrays and a null type go to unknown
+    val flags = rows(LogPipeline.parse(in, wlCfg))
+      .map(r => (r.getAs[Int]("i"), r.getAs[Boolean]("kept"), r.getAs[Boolean]("valid")))
+    assert(flags.map(_._1) == edgePayloads.indices)
+    assert(flags.filter(_._2).map(_._1) == Seq(4, 5, 7, 8, 9, 10, 12, 13, 14, 15, 16))
+    assert(flags.filter(f => f._2 && f._3).map(_._1) == Seq(4, 5, 16))
   }
 
   test("property: every kept record lands in exactly one route (seeded corpus)") {

@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.expressions.{JsonToStructs, UnBase64}
+import org.apache.spark.sql.functions.{col, explode, from_json, timestamp_seconds, unbase64}
 
 import graft.pipeline.LogPipeline
 import graft.sources.KinesisEventSource
@@ -43,6 +44,41 @@ class SourcesSpec extends AnyFunSuite {
   test("malformed event JSON yields no records (not a crash)") {
     val records = KinesisEventSource.fromLambdaEvents(Seq("{not json").toDF("value"))
     assert(records.count() == 0)
+  }
+
+  test("the event source parses each event once and base64-decodes each record once") {
+    val rec = (fields: String) => s"{'kinesis':{$fields}}"
+    val events = Seq(
+      Seq(rec(s"'partitionKey':'a','sequenceNumber':'1','data':'${b64("x")}'," +
+          "'approximateArrivalTimestamp':1.5"),
+        rec("'partitionKey':'b','data':null"), rec("'partitionKey':'c'"), "null",
+        "{'eventID':'e'}", rec("'partitionKey':'d','data':''"),
+        rec("'partitionKey':'e','data':'!!'"), rec(s"'partitionKey':'f','data':'${b64("ü")}'"))
+        .mkString("{'Records':[", ",", "]}"),
+      "{'Records':[]}", "{'Records':null}", "{}", "{not json", "").map(_.replace('\'', '"'))
+    val path = java.nio.file.Files.write(java.nio.file.Files.createTempFile("graft-events", ".json"),
+      events.mkString("\n").getBytes("UTF-8")).toString
+    val after = KinesisEventSource.readLambdaEventFile(spark, path)
+    // the form before: explode over from_json, the null test on decoded bytes
+    val before = spark.read.text(path)
+      .select(explode(from_json(col("value"), KinesisEventSource.eventSchema)
+        .getField("Records")).as("r"))
+      .select(col("r.kinesis.partitionKey").as("partition_key"),
+        col("r.kinesis.sequenceNumber").as("sequence_number"),
+        timestamp_seconds(col("r.kinesis.approximateArrivalTimestamp")).as("arrival_ts"),
+        unbase64(col("r.kinesis.data")).as("data"))
+      .filter(col("data").isNotNull)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getString(0), r.getString(1), r.getTimestamp(2), r.getAs[Array[Byte]](3).toSeq)).toSeq
+      .sortBy(_._1)
+    assert(after.columns.toSeq == before.columns.toSeq)
+    assert(rows(after) == rows(before))
+    assert(rows(after).map(_._1) == Seq("a", "d", "e", "f"))
+
+    val plan = after.queryExecution.executedPlan
+    val exprs = PlanAudit.expressions(plan)
+    assert(exprs.count(_.isInstanceOf[UnBase64]) == 1, plan.toString)
+    assert(exprs.count(_.isInstanceOf[JsonToStructs]) == 1, plan.toString)
   }
 
   test("Kinesis connector binding maps the reference ESM knobs 1:1 (O1)") {

@@ -1096,6 +1096,21 @@ class StreamingSpec extends AnyFunSuite {
     assert(onStream.isEmpty, Forks.describe(onStream))
   }
 
+  test("each LogStreamJob micro-batch write parses each payload's JSON once") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-once")
+    val in = java.nio.file.Files.createDirectory(tmp.resolve("in"))
+    (0 until 2).foreach(k => logFile(in, s"f-$k.json", k * 10 until k * 10 + 10))
+    val plans = PlanAudit.writePlans(spark, 2) {
+      val q = LogStreamJob.startFromTextDir(spark, in.toString,
+        PipelineConfig(whitelist = Seq("app")), s"$tmp/out", s"$tmp/cp", maxFilesPerTrigger = Some(1))
+      q.awaitTermination(60000)
+      assert(q.exception.isEmpty)
+    }
+    assert(plans.size == 2)
+    plans.foreach(PlanAudit.assertParsesOnce)
+    assert(writtenIds(s"$tmp/out") == (0 until 20))
+  }
+
   test("a checkpoint resumes exactly once across the stock and the fork-free LocalFs, both ways") {
     val stock = "org.apache.hadoop.fs.local.LocalFs"
     for ((first, second) <- Seq(Some(stock) -> None, None -> Some(stock))) {
