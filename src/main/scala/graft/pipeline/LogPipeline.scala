@@ -207,6 +207,8 @@ object LogPipeline {
   def run(records: DataFrame, cfg: PipelineConfig, outRoot: String,
           dataCol: String = "data", dedupe: Boolean = false): Unit = {
     val parsed = parse(decode(records, dataCol), cfg)
-    write(if (dedupe) dedupeById(parsed) else parsed, cfg, outRoot)
+    // dedupe only what the write keeps: dropped rows stay out of the shuffle,
+    // and a dropped least copy of an id cannot hide its kept copies
+    write(if (dedupe) dedupeById(parsed.filter(col("kept"))) else parsed, cfg, outRoot)
   }
 }

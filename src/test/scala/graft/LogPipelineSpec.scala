@@ -288,7 +288,7 @@ class LogPipelineSpec extends AnyFunSuite {
   private val valid2 = """{"log_type":"app","log_id":"2","time":"2026-08-12T02:00:00Z"}"""
   private val noType = """{"log_id":"3","time":"2026-08-12T03:00:00Z"}"""
   private val badTime = """{"log_type":"app","log_id":"4","time":"not-a-time"}"""
-  private val array = "[1,2]"
+  private val jsonArray = "[1,2]"
   private val wlMiss = """{"log_type":"debug","log_id":"5","time":"2026-08-12T00:00:00Z"}"""
 
   /** One record per decode branch (plain, gzip, KPL, corrupt gzip, CWL data
@@ -299,12 +299,12 @@ class LogPipelineSpec extends AnyFunSuite {
   private def branchFixture = {
     val b = (s: String) => s.getBytes("UTF-8")
     val cwlData = s"""{"messageType":"DATA_MESSAGE","logEvents":[{"message":${
-      "\"" + valid2.replace("\"", "\\\"") + "\""}},{"message":"$array"}]}"""
+      "\"" + valid2.replace("\"", "\\\"") + "\""}},{"message":"$jsonArray"}]}"""
     Seq(b(valid1), GzipUtil.gzip(b(noType)), Kpl.aggregate(Seq(b(wlMiss), b("not json {{{"))),
       Array[Byte](0x1f, 0x8b.toByte, 1, 2, 3, 4), b(cwlData),
       b("""{"messageType":"CONTROL_MESSAGE","logEvents":[]}"""), b(badTime)).toDF("data")
   }
-  private val branchKept = Set(valid1, valid2, noType, badTime, array)
+  private val branchKept = Set(valid1, valid2, noType, badTime, jsonArray)
 
   private def writtenLines(root: String): Seq[String] =
     spark.read.text(root).select("value").as[String].collect().toSeq.sorted
@@ -327,7 +327,18 @@ class LogPipelineSpec extends AnyFunSuite {
     assert(plans.size == 1)
     PlanAudit.assertParsesOnce(plans.head)
     // the id-less array passes through once per copy; every id is written once
-    assert(writtenLines(s"$tmp/${cfg.pathPrefix}") == (branchKept.toSeq :+ array).sorted)
+    assert(writtenLines(s"$tmp/${cfg.pathPrefix}") == (branchKept.toSeq :+ jsonArray).sorted)
+  }
+
+  test("the deduplicating write keeps an id whose least copy is a whitelist miss") {
+    // no time: both copies route to unknown under one key; the least payload
+    // is the miss, which the write drops
+    val miss = """{"log_type":"aaa","log_id":"9"}"""
+    val hit = """{"log_type":"app","log_id":"9"}"""
+    val tmp = Files.createTempDirectory("graft-dedupe-kept").toString
+    LogPipeline.run(Seq(miss, hit, hit).map(_.getBytes("UTF-8")).toDF("data"), wlCfg, tmp,
+      dedupe = true)
+    assert(writtenLines(s"$tmp/${cfg.pathPrefix}") == Seq(hit))
   }
 
   test("dedupeById returns the rows of the filter-and-union form it replaced") {
