@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR, prints
   * one JSON line. A failed query is recorded as -1 so it can never inflate
   * the total while looking healthy.
@@ -21,22 +19,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // r11: the default 100-entry generated-code cache evicts constantly
-      // under a 240-query catalog (each query emits tens of codegen
-      // fragments), so every pass re-Janino-compiles and the JIT starts
-      // cold — the interpreter-vs-C2 race is the measured source of the
-      // intermittent 10x-task-CPU passes. Static conf: must be set on the
-      // FIRST session of the JVM.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // Execute via a noop-format write, not count(): under count() Catalyst's
     // EliminateSorts removes every terminal ORDER BY, so the bench would

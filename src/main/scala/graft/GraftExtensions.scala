@@ -13,7 +13,7 @@ import graft.functions.gfn
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * or `SparkSession.builder.withExtensions(new GraftExtensions)`. This is the
+  * or the session builder's `withExtensions(new GraftExtensions)`. This is the
   * idiomatic extension seam — no session-state mutation, works on connect-
   * style deployments, and survives session cloning.
   */

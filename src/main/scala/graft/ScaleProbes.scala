@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measurement tooling (not part of the engine): the three targeted scale
@@ -39,15 +39,8 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbes {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = SparkEntry.session(cpus)
 
     val which = if (args.isEmpty)
                   Seq("simhash_knee", "stream_increment", "bpe_driver", "lm_probe")
@@ -75,7 +68,7 @@ object ScaleProbes {
               "^ shiftleft(1L, int(pmod(shiftrightunsigned(h, 6), 64))) " +
               "^ shiftleft(1L, int(pmod(shiftrightunsigned(h, 12), 64)))")
             .as("sig"))
-        base.unionByName(partners).repartition(cpus.toInt)
+        base.unionByName(partners).repartition(cpus)
       }
       for (n <- Seq(500000L, 6000000L)) {
         val s = sigs(n).persist()
@@ -101,7 +94,7 @@ object ScaleProbes {
     if (which.contains("stream_increment")) {
       val src = "/root/testdata/sf0.1"
       val sf1 = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
-      ScaleRehearsal.ensureSf1(spark, src, sf1, cpus.toInt)
+      ScaleRehearsal.ensureSf1(spark, src, sf1, cpus)
       // fixed probe batch: 500 docs sampled FROM the sf0.1 corpus with ids
       // offset out of every corpus id space (sf1 ids reach 5000*10+9; the
       // probe contract needs disjoint ids). Sampling from the corpus
@@ -141,7 +134,7 @@ object ScaleProbes {
       // steady state.
       val src = "/root/testdata/sf0.1"
       val sf1 = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
-      ScaleRehearsal.ensureSf1(spark, src, sf1, cpus.toInt)
+      ScaleRehearsal.ensureSf1(spark, src, sf1, cpus)
       val batch = Tables(spark, src, "documents")
         .where(pmod(col("doc_id"), lit(10)) === 0).limit(500)
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
@@ -176,7 +169,7 @@ object ScaleProbes {
                  conv(cast(100000 + exp(
                    (pmod(xxhash64(id, i), 100000) / 100000.0) * ln(50000)
                  ) as bigint), 10, 26)), ' ')""").as("text"))
-        .repartition(cpus.toInt).persist()
+        .repartition(cpus).persist()
       docs.count()
       val nMerges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "1024").toInt
       val (drv, tDrv) = timed {

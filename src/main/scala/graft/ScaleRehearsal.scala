@@ -20,19 +20,12 @@ import org.apache.spark.sql.functions._
   */
 object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = SparkEntry.session(cpus)
 
     val src = "/root/testdata/sf0.1"
     val sf1 = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
-    ensureSf1(spark, src, sf1, cpus.toInt)
+    ensureSf1(spark, src, sf1, cpus)
     runFamily(spark, src, sf1, args.toSeq)
     spark.stop()
   }
@@ -41,8 +34,7 @@ object ScaleRehearsal {
     * [[ScaleProbes]], which measures index/probe behavior on the same sf1.
     */
   private[graft] def ensureSf1(spark: SparkSession, src: String, sf1: String,
-                               cpusN: Int): Unit = {
-    val cpus = cpusN.toString
+                               cpus: Int): Unit = {
     val docsOut = s"$sf1/documents.parquet"
     if (!new java.io.File(docsOut).exists()) {
       new java.io.File(sf1).mkdirs()
@@ -55,7 +47,7 @@ object ScaleRehearsal {
               t => concat(t, lit("_r"), col("rep"))), " ")).as("text"),
           col("lang"), col("source"))
         .withColumn("n_chars", length(col("text")).cast("long"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(docsOut)
       for (t <- Seq("region", "nation", "customer", "supplier", "part",
                     "orders", "lineitem", "events")) {
@@ -90,7 +82,7 @@ object ScaleRehearsal {
               pmod(i * (col("rep") * 2 + 1) + col("rep"), lit(64)) + 1))
             .as("embedding"),
           col("label"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(embOut)
       println(s"[scale] built $embOut")
     }
@@ -108,7 +100,7 @@ object ScaleRehearsal {
         .withColumn("c_custkey", col("c_custkey") * 10L + col("rep"))
         .withColumn("c_name", format_string("Customer#%09d", col("c_custkey")))
         .drop("rep")
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(custOut)
       println(s"[scale] built $custOut")
     }
@@ -125,7 +117,7 @@ object ScaleRehearsal {
         .withColumn("o_orderkey", col("o_orderkey") * 10L + col("rep"))
         .withColumn("o_custkey", col("o_custkey") * 10L + col("rep"))
         .drop("rep")
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(ordOut)
       println(s"[scale] built $ordOut")
     }
@@ -143,7 +135,7 @@ object ScaleRehearsal {
         .withColumn("event_id", col("event_id") * 10L + col("rep"))
         .withColumn("user_id", col("user_id") * 10L + col("rep"))
         .drop("rep")
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(evOut)
       println(s"[scale] built $evOut")
     }
@@ -155,7 +147,7 @@ object ScaleRehearsal {
         .withColumn("l_orderkey", col("l_orderkey") * 10L + col("rep"))
         .withColumn("l_suppkey", col("l_suppkey") * 10L + col("rep"))
         .drop("rep")
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(liOut)
       println(s"[scale] built $liOut")
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement tooling (not part of the engine): the LM hash-key SKEW
@@ -26,17 +25,10 @@ import org.apache.spark.sql.functions._
   */
 object SkewRehearsal {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // the at-scale join regime: model tables do NOT broadcast
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = SparkEntry.session(cpus)
+    // the at-scale join regime: model tables do NOT broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     import spark.implicits._
 
     val src = "/root/testdata/sf0.1"
@@ -52,7 +44,7 @@ object SkewRehearsal {
           .otherwise(array_join(transform(split(col("text"), " "),
             t => when(array_contains(hotLit, t), t)
               .otherwise(concat(t, lit("_r"), col("rep")))), " ")).as("text"))
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nDocs = docs10.count()
 

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke: emulates the driver's t1 check (entry rows > 0) and prints a
   * named query's result/plan when given args: [queryName [sfDir]].
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(8)
     if (args.isEmpty) {
       val df = SparkEntry.entry(spark)
       df.show(20, truncate = false)

@@ -29,4 +29,25 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     Queries.all.flatMap(q => q.oracle.map(o => q.name -> o.stripMargin.trim)).toMap
+
+  /** The local session the mains run on: `cores` task threads and as many
+    * shuffle partitions, UTC, AQE on, no UI, log level WARN, and a
+    * 10,000-entry generated-code cache. The default 100-entry cache evicts
+    * constantly under the 240-query catalog (each query emits tens of
+    * codegen fragments), so every pass re-compiles with Janino and the JIT
+    * starts cold, the measured source of intermittent 10x-task-CPU bench
+    * passes. It is a static conf: it must be set on the JVM's first session.
+    */
+  def session(cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

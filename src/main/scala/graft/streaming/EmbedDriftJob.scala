@@ -23,12 +23,8 @@ import graft.ops.LinAlg
   * dim²-row merge; the stream is never rescanned and state never grows
   * past dim·(dim+1)/2 rows regardless of volume.
   *
-  * ==Restart contract==
-  * Identical to [[EvalMonitorJob]] (count-like sums are NOT
-  * retry-idempotent): `momentsSink` receives `(batchId, moments)`;
-  * persist both atomically (latest-wins), rehydrate via `initialMoments`
-  * + `initialBatchId`, and a replayed batch's merge becomes a no-op
-  * instead of a double count.
+  * Restart: the [[PerBatch.fold]] contract, through `momentsSink`,
+  * `initialMoments` and `initialBatchId`.
   *
   * Input schema: an embedding column named by `vecCol`. Output per
   * trigger: the [[graft.ops.LinAlg.covarianceFromMoments]] table.
@@ -45,33 +41,14 @@ object EmbedDriftJob {
             initialBatchId: Long = Long.MinValue,
             momentsSink: Option[(Long, DataFrame) => Unit] = None,
             trigger: Trigger = Trigger.AvailableNow())
-           (implicit spark: SparkSession): StreamingQuery = {
-    // foreachBatch triggers run sequentially, so plain refs are race-free
-    val cpRef =
-      new java.util.concurrent.atomic.AtomicReference[graft.ops.Caches.Checkpointed](null)
-    @volatile var init = initialMoments // consumed by the first trigger
-    @volatile var lastMerged = initialBatchId
-    PerBatch.start(emb, checkpointDir, trigger) { (batch, batchId) =>
-      if (batchId > lastMerged) {
-        val batchMoments = LinAlg.secondMoments(batch, vecCol, dim, scale)
-        val base = Option(cpRef.get()).map(_.df).orElse(init)
-        val merged = base
-          .map(st => LinAlg.mergeMoments(st, batchMoments))
-          .getOrElse(batchMoments)
-        // dim²-row state, lineage-cut per trigger; round N released the
-        // moment N+1 is stored (the Caches loop contract)
-        val next = graft.ops.Caches.checkpoint(merged)
-        val prev = cpRef.getAndSet(next)
-        if (prev != null) prev.release()
-        init = None
-        lastMerged = batchId
-      }
-      val cur: DataFrame = Option(cpRef.get()).map(_.df).orElse(init)
-        .getOrElse(spark.range(0).selectExpr("0 as i", "0 as j",
-          "cast(0 as long) as n", "cast(0 as long) as s_ij",
-          "cast(0 as long) as s_i", "cast(0 as long) as s_j"))
-      momentsSink.foreach(sink => sink(lastMerged, cur))
-      outSink(LinAlg.covarianceFromMoments(cur))
-    }
-  }
+           (implicit spark: SparkSession): StreamingQuery =
+    PerBatch.fold(emb, checkpointDir, trigger, initialMoments, initialBatchId,
+        spark.range(0).selectExpr("0 as i", "0 as j", "cast(0 as long) as n",
+          "cast(0 as long) as s_ij", "cast(0 as long) as s_i", "cast(0 as long) as s_j"))(
+      LinAlg.secondMoments(_, vecCol, dim, scale),
+      LinAlg.mergeMoments,
+      (id, moments) => {
+        momentsSink.foreach(_(id, moments))
+        outSink(LinAlg.covarianceFromMoments(moments))
+      })
 }

@@ -59,16 +59,15 @@ object IncrementalDedupJob {
                    threshold: Double = 0.5,
                    trigger: Trigger = Trigger.AvailableNow())
                   (implicit spark: SparkSession): StreamingQuery = {
-    // foreachBatch triggers run sequentially, so a plain ref is race-free
-    val indexRef = new java.util.concurrent.atomic.AtomicReference(initialIndex)
+    // foreachBatch runs one trigger at a time, on the stream's own thread
+    var index = initialIndex
     PerBatch.start(docs, checkpointDir, trigger) { (batch, _) =>
       val snap = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       snap.count()
-      val index = indexRef.get()
       val hits = Dedup.minhashProbe(index, snap, threshold)
       outSink(snap.join(hits, snap("doc_id") === hits("new_id"), "left")
         .select(snap("doc_id"), snap("text"), hits("dup_of"), hits("jaccard")))
-      indexRef.set(Dedup.minhashIndexMerge(index, snap))
+      index = Dedup.minhashIndexMerge(index, snap)
       // the merge materialized its increment eagerly, so the raw batch
       // snapshot is garbage now — without this a long-running stream
       // pins one batch-sized cache per trigger, forever

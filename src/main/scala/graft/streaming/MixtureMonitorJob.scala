@@ -25,11 +25,8 @@ import graft.ops.Mix
   * over its own increment plus a G-cell merge — the stream is never
   * rescanned and state never grows past G cells (G = domain count).
   *
-  * ==Restart contract==
-  * Identical to [[EvalMonitorJob]] (count merges are NOT idempotent):
-  * `cellsSink` receives `(batchId, cells)`; persist both atomically,
-  * latest-wins, and rehydrate via `initialCells`/`initialBatchId` — a
-  * replayed batch id merges as a no-op instead of double-counting.
+  * Restart: the [[PerBatch.fold]] contract, through `cellsSink`,
+  * `initialCells` and `initialBatchId`.
   *
   * Input schema: (stratum, loss) with loss an exact integer (the
   * doremiWeights contract). Output per trigger: the doremiFromCells table.
@@ -45,35 +42,13 @@ object MixtureMonitorJob {
             initialBatchId: Long = Long.MinValue,
             cellsSink: Option[(Long, DataFrame) => Unit] = None,
             trigger: Trigger = Trigger.AvailableNow())
-           (implicit spark: SparkSession): StreamingQuery = {
-    // foreachBatch triggers run sequentially, so plain refs are race-free
-    val cpRef =
-      new java.util.concurrent.atomic.AtomicReference[graft.ops.Caches.Checkpointed](null)
-    @volatile var init = initialCells // consumed by the first trigger
-    @volatile var lastMerged = initialBatchId
-    PerBatch.start(scored, checkpointDir, trigger) { (batch, batchId) =>
-      if (batchId > lastMerged) {
-        val batchCells = Mix.lossCells(batch, col("stratum"), col("loss"))
-        val base = Option(cpRef.get()).map(_.df).orElse(init)
-        val merged = base
-          .map(st => Mix.mergeLossCells(st, batchCells))
-          .getOrElse(batchCells)
-        // G-cell state, lineage-cut per trigger; round N released the
-        // moment N+1 is stored (the Caches loop contract)
-        val next = graft.ops.Caches.checkpoint(merged)
-        val prev = cpRef.getAndSet(next)
-        if (prev != null) prev.release()
-        init = None
-        lastMerged = batchId
-      }
-      // raw state first (the EvalMonitorJob ordering rationale: offsets
-      // commit after foreachBatch returns; the id guard keeps a replay a
-      // no-op and the persisted snapshot exact under latest-wins)
-      val cur: DataFrame = Option(cpRef.get()).map(_.df).orElse(init)
-        .getOrElse(spark.range(0).select(lit("").as("stratum"),
-          lit(0L).as("n_docs"), lit(0L).as("sl")))
-      cellsSink.foreach(sink => sink(lastMerged, cur))
-      outSink(Mix.doremiFromCells(cur, eta, epsMille))
-    }
-  }
+           (implicit spark: SparkSession): StreamingQuery =
+    PerBatch.fold(scored, checkpointDir, trigger, initialCells, initialBatchId,
+        spark.range(0).select(lit("").as("stratum"), lit(0L).as("n_docs"), lit(0L).as("sl")))(
+      Mix.lossCells(_, col("stratum"), col("loss")),
+      Mix.mergeLossCells,
+      (id, cells) => {
+        cellsSink.foreach(_(id, cells))
+        outSink(Mix.doremiFromCells(cells, eta, epsMille))
+      })
 }

@@ -28,11 +28,8 @@ import graft.ops.Profile
   * key column would grow state linearly, exactly as it would grow any
   * COUNT(DISTINCT) state.
   *
-  * ==Restart contract==
-  * Identical to [[EvalMonitorJob]] (count merges are NOT idempotent):
-  * `cellsSink` receives `(batchId, cells)`; persist both atomically,
-  * latest-wins, and rehydrate via `initialCells`/`initialBatchId` — a
-  * replayed batch id merges as a no-op instead of double-counting.
+  * Restart: the [[PerBatch.fold]] contract, through `cellsSink`,
+  * `initialCells` and `initialBatchId`.
   */
 object ProfileMonitorJob {
 
@@ -44,35 +41,13 @@ object ProfileMonitorJob {
             initialBatchId: Long = Long.MinValue,
             cellsSink: Option[(Long, DataFrame) => Unit] = None,
             trigger: Trigger = Trigger.AvailableNow())
-           (implicit spark: SparkSession): StreamingQuery = {
-    // foreachBatch triggers run sequentially, so plain refs are race-free
-    val cpRef =
-      new java.util.concurrent.atomic.AtomicReference[graft.ops.Caches.Checkpointed](null)
-    @volatile var init = initialCells // consumed by the first trigger
-    @volatile var lastMerged = initialBatchId
-    PerBatch.start(rows, checkpointDir, trigger) { (batch, batchId) =>
-      if (batchId > lastMerged) {
-        val batchCells = Profile.profileCells(batch, cols)
-        val base = Option(cpRef.get()).map(_.df).orElse(init)
-        val merged = base
-          .map(st => Profile.mergeProfileCells(st, batchCells))
-          .getOrElse(batchCells)
-        // cell-table state, lineage-cut per trigger; round N released
-        // the moment N+1 is stored (the Caches loop contract)
-        val next = graft.ops.Caches.checkpoint(merged)
-        val prev = cpRef.getAndSet(next)
-        if (prev != null) prev.release()
-        init = None
-        lastMerged = batchId
-      }
-      // raw state first (the EvalMonitorJob ordering rationale: offsets
-      // commit after foreachBatch returns; the id guard keeps a replay a
-      // no-op and the persisted snapshot exact under latest-wins)
-      val cur: DataFrame = Option(cpRef.get()).map(_.df).orElse(init)
-        .getOrElse(spark.range(0).select(lit("").as("column"),
-          lit("").as("v"), lit(0L).as("m")))
-      cellsSink.foreach(sink => sink(lastMerged, cur))
-      outSink(Profile.profileFromCells(cur))
-    }
-  }
+           (implicit spark: SparkSession): StreamingQuery =
+    PerBatch.fold(rows, checkpointDir, trigger, initialCells, initialBatchId,
+        spark.range(0).select(lit("").as("column"), lit("").as("v"), lit(0L).as("m")))(
+      Profile.profileCells(_, cols),
+      Profile.mergeProfileCells,
+      (id, cells) => {
+        cellsSink.foreach(_(id, cells))
+        outSink(Profile.profileFromCells(cells))
+      })
 }

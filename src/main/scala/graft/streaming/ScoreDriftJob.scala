@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.Eval
@@ -22,12 +23,8 @@ import graft.ops.Eval
   * increment; the stream is never rescanned and state never grows past
   * edges+1 rows regardless of volume.
   *
-  * ==Restart contract==
-  * Identical to [[EvalMonitorJob]]/[[EmbedDriftJob]] (count sums are NOT
-  * retry-idempotent): `countsSink` receives `(batchId, counts)`; persist
-  * both atomically (latest-wins), rehydrate via `initialCounts` +
-  * `initialBatchId`, and a replayed batch's merge becomes a no-op
-  * instead of a double count.
+  * Restart: the [[PerBatch.fold]] contract, through `countsSink`,
+  * `initialCounts` and `initialBatchId`.
   *
   * Input schema: a double-castable column named by `scoreCol`.
   * `refCounts` is the reference histogram in the [[graft.ops.Eval
@@ -46,33 +43,13 @@ object ScoreDriftJob {
             initialBatchId: Long = Long.MinValue,
             countsSink: Option[(Long, DataFrame) => Unit] = None,
             trigger: Trigger = Trigger.AvailableNow())
-           (implicit spark: SparkSession): StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    // foreachBatch triggers run sequentially, so plain refs are race-free
-    val cpRef =
-      new java.util.concurrent.atomic.AtomicReference[graft.ops.Caches.Checkpointed](null)
-    @volatile var init = initialCounts // consumed by the first trigger
-    @volatile var lastMerged = initialBatchId
-    PerBatch.start(scores, checkpointDir, trigger) { (batch, batchId) =>
-      if (batchId > lastMerged) {
-        val batchCounts = Eval.bucketCounts(batch, col(scoreCol), edges)
-        val base = Option(cpRef.get()).map(_.df).orElse(init)
-        val merged = base
-          .map(st => Eval.mergeBucketCounts(st, batchCounts))
-          .getOrElse(batchCounts)
-        // ≤(edges+1)-row state, lineage-cut per trigger; round N is
-        // released the moment N+1 is stored (the Caches loop contract)
-        val next = graft.ops.Caches.checkpoint(merged)
-        val prev = cpRef.getAndSet(next)
-        if (prev != null) prev.release()
-        init = None
-        lastMerged = batchId
-      }
-      val cur: DataFrame = Option(cpRef.get()).map(_.df).orElse(init)
-        .getOrElse(spark.range(0)
-          .selectExpr("cast(0 as long) as bucket", "cast(0 as long) as cnt"))
-      countsSink.foreach(sink => sink(lastMerged, cur))
-      outSink(Eval.driftFromCounts(cur, refCounts, edges))
-    }
-  }
+           (implicit spark: SparkSession): StreamingQuery =
+    PerBatch.fold(scores, checkpointDir, trigger, initialCounts, initialBatchId,
+        spark.range(0).selectExpr("cast(0 as long) as bucket", "cast(0 as long) as cnt"))(
+      batch => Eval.bucketCounts(batch, col(scoreCol), edges),
+      Eval.mergeBucketCounts,
+      (id, counts) => {
+        countsSink.foreach(_(id, counts))
+        outSink(Eval.driftFromCounts(counts, refCounts, edges))
+      })
 }

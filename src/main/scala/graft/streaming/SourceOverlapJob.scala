@@ -28,19 +28,12 @@ import graft.ops.Dedup
   * Input schema: (source, text). Output per trigger:
   * (src_a, src_b, jaccard_est).
   *
-  * ==Restart contract==
-  * The sketch state lives in the DRIVER (a [[graft.ops.Caches.Checkpointed]]
-  * ref), while `checkpointLocation` commits only SOURCE OFFSETS. After a
-  * restart, Spark will NOT replay batches it already committed — but the
-  * driver-side state is gone — so a bare restart silently loses all
-  * pre-restart mass. Callers that need restart durability MUST close the
-  * loop themselves: pass `cellsSink` and persist the raw (src, j, v) state
-  * it receives each trigger (it is tiny — G×k cells — and elementwise-min
-  * mergeable, so overwriting with the latest snapshot is always safe),
-  * then rehydrate via `initialCells` on the next `start`. Restarting with
-  * neither `initialCells` nor a FRESH `checkpointDir` is an
-  * estimates-since-restart job, not a continuation. StreamingSpec pins
-  * that kill → rehydrate → resume equals the uninterrupted run.
+  * Restart: the [[PerBatch.fold]] contract. `cellsSink` receives the
+  * G×k-cell (src, j, v) state; persist it latest-wins and pass it back as
+  * `initialCells`. The min-merge is idempotent, so the snapshot needs no
+  * batch id: a replayed batch merged again gives the same state.
+  * StreamingSpec pins that kill → rehydrate → resume equals the
+  * uninterrupted run.
   */
 object SourceOverlapJob {
 
@@ -52,33 +45,13 @@ object SourceOverlapJob {
             initialCells: Option[DataFrame] = None,
             cellsSink: Option[DataFrame => Unit] = None,
             trigger: Trigger = Trigger.AvailableNow())
-           (implicit spark: SparkSession): StreamingQuery = {
-    // foreachBatch triggers run sequentially, so plain refs are race-free
-    val cpRef =
-      new java.util.concurrent.atomic.AtomicReference[graft.ops.Caches.Checkpointed](null)
-    @volatile var init = initialCells // consumed by the first trigger
-    PerBatch.start(docs, checkpointDir, trigger) { (batch, _) =>
-      val batchCells = Dedup.sourceSignatureCells(
-        batch, col("source"), col("text"), w, k)
-      val base = Option(cpRef.get()).map(_.df).orElse(init)
-      val merged = base
-        .map(st => Dedup.mergeSignatureCells(st, batchCells))
-        .getOrElse(batchCells)
-      // materialize the G×k-cell state eagerly and cut it from the
-      // batch's lineage: a foreachBatch frame is only valid inside its
-      // own trigger, and the state must outlive it. Round N's blocks are
-      // released the moment round N+1 is stored (the Caches loop
-      // contract), so in-flight cache stays ONE G×k table deep.
-      val next = graft.ops.Caches.checkpoint(merged)
-      val prev = cpRef.getAndSet(next)
-      if (prev != null) prev.release()
-      init = None
-      // raw state first: if outSink throws, the caller still has the
-      // snapshot that includes this batch (offsets commit after
-      // foreachBatch returns, so a crash here replays the batch — min
-      // re-merge is idempotent)
-      cellsSink.foreach(sink => sink(next.df))
-      outSink(Dedup.overlapFromCells(next.df, k))
-    }
-  }
+           (implicit spark: SparkSession): StreamingQuery =
+    PerBatch.fold(docs, checkpointDir, trigger, initialCells, Long.MinValue,
+        spark.range(0).select(lit("").as("src"), lit(0).as("j"), lit(0L).as("v")))(
+      Dedup.sourceSignatureCells(_, col("source"), col("text"), w, k),
+      Dedup.mergeSignatureCells,
+      (_, cells) => {
+        cellsSink.foreach(_(cells))
+        outSink(Dedup.overlapFromCells(cells, k))
+      })
 }

@@ -32,17 +32,16 @@ object SubstringDedupJob {
                    checkpointDir: String,
                    trigger: Trigger = Trigger.AvailableNow())
                   (implicit spark: SparkSession): StreamingQuery = {
-    // foreachBatch triggers run sequentially, so a plain ref is race-free
-    val indexRef = new java.util.concurrent.atomic.AtomicReference(initialIndex)
+    // foreachBatch runs one trigger at a time, on the stream's own thread
+    var index = initialIndex
     PerBatch.start(docs, checkpointDir, trigger) { (batch, _) =>
       // materialize before the merge: a foreachBatch frame is only
       // guaranteed valid inside its own trigger; the index outlives it
       val snap = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       snap.count()
-      val index = indexRef.get()
       val stats = Dedup.substringProbe(index, snap)
       outSink(snap.join(stats, "doc_id"))
-      indexRef.set(Dedup.substringIndexMerge(index, snap))
+      index = Dedup.substringIndexMerge(index, snap)
       // merge materialized its novel-gram increment eagerly; drop the
       // batch snapshot or the stream leaks one cache per trigger
       snap.unpersist(blocking = false)

@@ -1,8 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, count, expr, lit, sum, unix_micros, window}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.streaming.{CurationStreamJob, LogStreamJob, PerBatch}
 
@@ -763,53 +765,107 @@ class StreamingSpec extends AnyFunSuite {
     } finally { q.stop(); graft.ops.Caches.drainAll(spark) }
   }
 
-  test("eval monitor restart: batch-id guard makes a replayed batch a no-op, counts stay exact") {
-    import spark.implicits._
-    implicit val s = spark
-    implicit val sqlCtx = spark.sqlContext
-    val batch1 = Seq(("en", "en"), ("en", "es"), ("es", "es"))
-    val batch2 = Seq(("de", "de"), ("es", "en"))
-    @volatile var savedId = Long.MinValue
-    @volatile var savedCells: Seq[(String, String, Long)] = Seq.empty
-    @volatile var last: Array[org.apache.spark.sql.Row] = Array.empty
+  // ---- monitor restart: every batch-id-guarded fold ----
 
-    val mem1 = MemoryStream[(String, String)]
-    val q1 = graft.streaming.EvalMonitorJob.start(
-      mem1.toDF().toDF("pred", "gold"),
-      out => last = out.collect(),
-      java.nio.file.Files.createTempDirectory("evalmon_r1").toString,
-      cellsSink = Some((id, cells) => {
-        savedId = id
-        savedCells = cells.collect()
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-      }),
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-    try {
-      mem1.addData(batch1: _*); q1.processAllAvailable()
-    } finally { q1.stop() }
-    assert(savedId == 0L && savedCells.nonEmpty)
+  /** A monitor whose fold merges each batch id at most once. `start` takes
+    * (stream, outSink, checkpoint, initial state, initial batch id, state
+    * sink); `oneShot` is the batch op over the same input.
+    */
+  private case class GuardedMonitor(
+      name: String,
+      batches: SparkSession => (DataFrame, DataFrame),
+      start: (DataFrame, DataFrame => Unit, String, Option[DataFrame], Long,
+              Option[(Long, DataFrame) => Unit]) => StreamingQuery,
+      oneShot: DataFrame => DataFrame)
 
-    // "restart after a crash that persisted the snapshot but not the
-    // offset": batch 1 REPLAYS (same id 0 in the fresh run) — the
-    // initialBatchId guard must skip its merge, else it double-counts
-    val mem2 = MemoryStream[(String, String)]
-    val q2 = graft.streaming.EvalMonitorJob.start(
-      mem2.toDF().toDF("pred", "gold"),
-      out => last = out.orderBy(col("cls")).collect(),
-      java.nio.file.Files.createTempDirectory("evalmon_r2").toString,
-      initialCells = Some(savedCells.toDF("pred", "gold", "n")),
-      initialBatchId = savedId,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-    try {
-      mem2.addData(batch1: _*); q2.processAllAvailable() // replayed: skipped
-      mem2.addData(batch2: _*); q2.processAllAvailable() // new: merged
-      val oneShot = graft.ops.Eval.confusionStats(
-          (batch1 ++ batch2).toDF("pred", "gold"), col("pred"), col("gold"))
-        .orderBy(col("cls")).collect().map(_.toSeq)
-      assert(last.map(_.toSeq).toSeq == oneShot.toSeq,
-        s"replayed batch must not double-count: ${last.toSeq} vs ${oneShot.toSeq}")
-    } finally { q2.stop(); graft.ops.Caches.drainAll(spark) }
+  private val pt0 = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)
+  private val driftEdges = Seq(10.0, 20.0, 30.0, 40.0)
+
+  private val guardedMonitors = Seq(
+    GuardedMonitor("eval",
+      s => { import s.implicits._
+        (Seq(("en", "en"), ("en", "es"), ("es", "es")).toDF("pred", "gold"),
+         Seq(("de", "de"), ("es", "en")).toDF("pred", "gold")) },
+      (in, out, ck, init, id, sink) => graft.streaming.EvalMonitorJob.start(in, out, ck,
+        initialCells = init, initialBatchId = id, cellsSink = sink, trigger = pt0)(in.sparkSession),
+      df => graft.ops.Eval.confusionStats(df, col("pred"), col("gold"))),
+    GuardedMonitor("mixture",
+      s => { import s.implicits._
+        (Seq(("web", 120L), ("web", 80L), ("code", 300L), ("books", 100L)).toDF("stratum", "loss"),
+         Seq(("web", 90L), ("code", 500L), ("code", 260L), ("books", 110L))
+           .toDF("stratum", "loss")) },
+      (in, out, ck, init, id, sink) => graft.streaming.MixtureMonitorJob.start(in, out, ck,
+        initialCells = init, initialBatchId = id, cellsSink = sink, trigger = pt0)(in.sparkSession),
+      df => graft.ops.Mix.doremiWeights(df, col("stratum"), col("loss"))),
+    GuardedMonitor("profile",
+      s => { import s.implicits._
+        (Seq((1L, Option("x")), (2L, Option.empty[String]), (3L, Option("x"))).toDF("id", "sval"),
+         Seq((4L, Option("y")), (5L, Option("x"))).toDF("id", "sval")) },
+      (in, out, ck, init, id, sink) => graft.streaming.ProfileMonitorJob.start(in, Seq("sval"),
+        out, ck, initialCells = init, initialBatchId = id, cellsSink = sink,
+        trigger = pt0)(in.sparkSession),
+      df => graft.ops.Profile.columnProfile(df, Seq("sval"))),
+    GuardedMonitor("score-drift",
+      s => { import s.implicits._
+        (Seq(12.0, 22.0, 22.0, 8.0).toDF("score"), Seq(33.0, 41.0, 22.0).toDF("score")) },
+      (in, out, ck, init, id, sink) => graft.streaming.ScoreDriftJob.start(in,
+        driftRef(in.sparkSession), driftEdges, out, ck, initialCounts = init,
+        initialBatchId = id, countsSink = sink, trigger = pt0)(in.sparkSession),
+      df => graft.ops.Eval.driftFromCounts(
+        graft.ops.Eval.bucketCounts(df, col("score"), driftEdges),
+        driftRef(df.sparkSession), driftEdges)),
+    GuardedMonitor("embed-drift",
+      s => { import s.implicits._
+        val rnd = new scala.util.Random(3)
+        def mk(n: Int, base: Long) = Seq.tabulate(n)(k =>
+          (base + k, Array.fill(4)(rnd.nextFloat() * 0.5f - 0.25f))).toDF("vec_id", "embedding")
+        (mk(30, 0L), mk(20, 1000L)) },
+      (in, out, ck, init, id, sink) => graft.streaming.EmbedDriftJob.start(in, out, ck,
+        dim = 4, initialMoments = init, initialBatchId = id, momentsSink = sink,
+        trigger = pt0)(in.sparkSession),
+      df => graft.ops.LinAlg.embedCovariance(df, "embedding", dim = 4)))
+
+  private def driftRef(s: SparkSession): DataFrame = {
+    import s.implicits._
+    graft.ops.Eval.bucketCounts(Seq(5.0, 15.0, 15.0, 25.0, 35.0, 45.0).toDF("v"), col("v"),
+      driftEdges)
   }
+
+  for (m <- guardedMonitors)
+    test(s"${m.name} monitor restart: batch-id guard makes a replayed batch a no-op, " +
+         "counts stay exact") {
+      val (b1, b2) = m.batches(spark)
+      def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+      val enc = org.apache.spark.sql.Encoders.row(b1.schema)
+      @volatile var last: Seq[String] = Seq.empty
+      @volatile var savedId = Long.MinValue
+      @volatile var saved: Array[Row] = Array.empty
+      @volatile var stateSchema: org.apache.spark.sql.types.StructType = null
+      val sink: Option[(Long, DataFrame) => Unit] = Some((id, state) => {
+        savedId = id; saved = state.collect(); stateSchema = state.schema
+      })
+      // one stream over a fresh checkpoint: each batch is fed and processed
+      def run(init: Option[DataFrame], initId: Long)(batches: (DataFrame, Seq[String])*): Unit = {
+        val mem = MemoryStream[Row](enc, spark)
+        val ck = java.nio.file.Files.createTempDirectory("monitor_restart").toString
+        val q = m.start(mem.toDF(), out => last = rows(out), ck, init, initId, sink)
+        try batches.foreach { case (in, want) =>
+          mem.addData(in.collect().toSeq: _*); q.processAllAvailable()
+          assert(last == want, s"${m.name}: stream $last vs batch $want")
+        } finally q.stop()
+      }
+      try {
+        val oneShot1 = rows(m.oneShot(b1))
+        run(None, Long.MinValue)(b1 -> oneShot1)
+        assert(savedId == 0L && saved.nonEmpty)
+        // restart after a crash that persisted the snapshot but not the
+        // offset: batch 1 replays as id 0 in the fresh run, and the guard
+        // must skip its merge, else it double-counts
+        val snapshot = spark.createDataFrame(java.util.Arrays.asList(saved: _*), stateSchema)
+        run(Some(snapshot), savedId)(b1 -> oneShot1, b2 -> rows(m.oneShot(b1.union(b2))))
+        assert(savedId == 1L)
+      } finally graft.ops.Caches.drainAll(spark)
+    }
 
   test("streaming embed-drift monitor: folded covariance equals the one-shot batch matrix") {
     import spark.implicits._

@@ -1,22 +1,27 @@
 #!/usr/bin/env python3
 """Split each file write in an uncompressed Spark event log into its phases.
 
-    python3 tools/eventlog_split.py <event log file>
+    python3 tools/eventlog_split.py <event log file> [--plans]
 
-For every SQL execution that runs an InsertIntoHadoopFsRelationCommand it
-prints: the enclosing execution's length and the time from its start to the
+For every SQL execution that writes (an InsertIntoHadoopFsRelationCommand for
+a file write, or the OverwriteByExpression that a `noop` overwrite such as
+graft.Bench's plans as) it prints: the enclosing execution's length and the time from its start to the
 write's start (for a streaming micro-batch the enclosing execution is the
 `addBatch` of foreachBatch; a batch write has none), the time from the
 write's start to its first job, each job (length, tasks, summed task run and
 CPU time, each task's deserialization time), the gap between jobs (AQE
 re-planning) and the time from the last job's end to the write's end (the job
 commit). Then one line per streaming progress event: batch id, input rows,
-addBatch and trigger time.
+addBatch and trigger time. Then every job in start order: length, stages and
+tasks that ran (skipped stages are not counted), the gap since the previous
+job's end, and the SQL execution it ran under. With --plans each write is
+followed by its formatted physical plan.
 """
 import collections
 import json
 import sys
 
+WRITE_NODES = ("InsertIntoHadoopFsRelationCommand", "OverwriteByExpression")
 execs = {}                               # id -> start, end, root, write
 jobs = {}                                # id -> start, end, exec, stages
 tasks = collections.defaultdict(list)    # stage -> [(deser ms, run ms, cpu ms)]
@@ -27,9 +32,10 @@ with open(sys.argv[1]) as fh:
         e = json.loads(line)
         ev = e["Event"]
         if ev.endswith("SparkListenerSQLExecutionStart"):
+            plan = e.get("physicalPlanDescription", "")
             execs[e["executionId"]] = dict(
                 start=e["time"], root=e.get("rootExecutionId", e["executionId"]),
-                write="InsertIntoHadoopFsRelationCommand" in e.get("physicalPlanDescription", ""))
+                write=any(n in plan for n in WRITE_NODES), plan=plan)
         elif ev.endswith("SparkListenerSQLExecutionEnd"):
             execs[e["executionId"]]["end"] = e["time"]
         elif ev == "SparkListenerJobStart":
@@ -69,9 +75,20 @@ for xid in sorted(execs):
         parts.append(job_text(j))
     parts.append(f"commit {x['end'] - js[-1]['end']}")
     print(f"write {xid}: " + " | ".join(parts))
+    if "--plans" in sys.argv[2:]:
+        print(x["plan"])
 
 for p in progress:
     d = p["durationMs"]
     rows = sum(src.get("numInputRows", 0) for src in p.get("sources", []))
     print(f"batch {p['batchId']}: {rows} input rows, addBatch {d.get('addBatch')} ms, "
           f"trigger {d.get('triggerExecution')} ms")
+
+prev_end = None
+for jid, j in sorted(jobs.items(), key=lambda kv: (kv[1]["start"], kv[0])):
+    ran = [st for st in j["stages"] if st in tasks]
+    length = f"{j['end'] - j['start']} ms" if "end" in j else "unfinished"
+    gap = f"{j['start'] - prev_end} ms" if prev_end is not None else "-"
+    print(f"job {jid}: {length}, {len(ran)} stages, {sum(len(tasks[st]) for st in ran)} tasks, "
+          f"gap {gap}, exec {j['exec'] if j['exec'] is not None else '-'}")
+    prev_end = j.get("end", prev_end)
