@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.gfn
-import graft.ops.{Components, Dedup, Multimodal, Similarity, TextOps}
+import graft.ops.{Components, Dedup, Multimodal, Similarity, Spread, TextOps}
 
 /** The engine's query catalog: one entry per operator from SURVEY.md §2 plus
   * the training-data-pipeline operator set. Each oracle-checked entry has a
@@ -28,40 +28,26 @@ object Queries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
 
-  /** `documents` spread across cores before a CPU-heavy text kernel: the
-    * sf-scale table is one single-row-group parquet file = one input split,
-    * which would pin the whole kernel (regex/entropy/n-gram/normalize) to
-    * one thread — at real scale the scan has thousands of splits and this
-    * shuffle (a few MB here) is noise next to the kernel CPU it unblocks.
-    * Hash-partitioned by doc_id, not round-robin: HashPartitioning(doc_id)
-    * satisfies every downstream doc_id-clustered requirement (groupBy /
-    * window keyed on doc_id [+ more columns]), so those later exchanges are
-    * elided — one shuffle buys both the parallelism and the co-partitioning.
-    * Explicit numPartitions so AQE can't coalesce the byte-tiny exchange
-    * back to one partition.
+  /** `documents` spread off a single-split scan before a CPU-heavy text
+    * kernel ([[Spread]]); doc_id, because most consumers group or window on
+    * it and the spread's hash partitioning then serves them too.
     */
-  private def docsSpread(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+  private[graft] def docsSpread(s: SparkSession, dir: String): DataFrame =
+    Spread(t(s, dir, "documents"), "doc_id")
 
   private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
 
   // ---------------------------------------------------------------- relational
 
   /** Hash aggregate with partial (map-side) combine — TPC-H Q1 shape.
-    * r12: projected to the 6 consumed columns and spread off the
-    * single-split scan (guide §2.5 "one huge unsplittable file →
-    * repartition immediately after the read"): the decimal partial sums
-    * ran as ONE ~1 s task on the one-row-group testdata file. Hashed on
-    * the near-unique price — keyless round-robin pays a hidden serial
-    * per-map-task sort (sortBeforeRepartition, SPARK-23207; measured
-    * 1.04 → 0.74 s switching to the hash spread).
+    * Projected to the 6 consumed columns, then [[Spread]] so the decimal
+    * partial sums do not run as one task; keyed on the near-unique price,
+    * not the 4 (flag, status) groups, which would skew.
     */
   private val q01 = Q("q01_pricing_summary",
-    (s, d) => t(s, d, "lineitem")
+    (s, d) => Spread(t(s, d, "lineitem")
       .select(col("l_returnflag"), col("l_linestatus"), col("l_quantity"),
-        col("l_extendedprice"), col("l_discount"), col("l_tax"))
-      .repartition(s.sparkContext.defaultParallelism, col("l_extendedprice"))
+        col("l_extendedprice"), col("l_discount"), col("l_tax")), "l_extendedprice")
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
         sum(dec(col("l_quantity"))).cast("double").as("sum_qty"),
@@ -291,15 +277,8 @@ object Queries {
         .when(col("event_id") % 3 === 1,
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"))
         .otherwise(date_format(col("ts"), "EEE, dd MMM yyyy HH:mm:ss Z"))
-      // The sf-scale events table is one parquet file = one input split,
-      // which would run the CPU-bound render+parse chain single-threaded;
-      // at real scale the scan has thousands of splits. Spread it explicitly
-      // (the rows are tiny, the shuffle is cheap, the kernel is the cost).
-      // r12: HASH-spread on the unique id — keyless round-robin pays a
-      // hidden per-map-task LOCAL SORT (sortBeforeRepartition,
-      // SPARK-23207), serial on the one-split scan
-      t(s, d, "events")
-        .repartition(s.sparkContext.defaultParallelism, col("event_id"))
+      // spread for the CPU-bound render+parse chain, on the unique id
+      Spread(t(s, d, "events"), "event_id")
         .withColumn("raw_ts", raw)
         .withColumn("parsed", gfn.lenient_ts(col("raw_ts")))
         .select(col("event_id"), col("parsed"))
@@ -613,12 +592,8 @@ object Queries {
     */
   private val q37 = Q("q37_pipeline_parse",
     (s, d) => {
-      // One parquet file = one input split at bench scale: repartition first
-      // so the CPU-bound render+parse chain uses every core (see q15 note;
-      // r12: hash on the unique id, not round-robin — the keyless form
-      // pays a serial sortBeforeRepartition on the one-split scan)
-      val raw = t(s, d, "events")
-        .repartition(s.sparkContext.defaultParallelism, col("event_id"))
+      // spread for the CPU-bound render+parse chain, on the unique id
+      val raw = Spread(t(s, d, "events"), "event_id")
         .select(to_json(struct(
           col("event_type").as("log_type"),
           col("event_id").cast("string").as("log_id"),
@@ -825,9 +800,8 @@ object Queries {
       val docs = t(s, d, "documents")
       val keepers = Dedup.exactGroups(docs).select(col("keep_id").as("doc_id"))
       val toks = split(lower(trim(col("text"))), "\\s+")
-      // keepers broadcast (they're ids), so without spreading the left side
-      // the whole gate chain would fuse into the single-split scan (see
-      // docsSpread); the kernels are the cost, the shuffle is noise
+      // keepers broadcast (they're ids): the left side is spread, or the
+      // whole gate chain would fuse into the scan
       docsSpread(s, d).join(keepers, Seq("doc_id"), "left_semi")
         .withColumn("n_tokens", TextOps.tokenCount(col("text")))
         .withColumn("punct_ratio",
@@ -1799,13 +1773,9 @@ object Queries {
     */
   private val q77 = Q("q77_mad_outliers",
     (s, d) => {
-      // spread the single-split scan so the exact-percentile PARTIAL buffers
-      // build in parallel — hashed on the near-unique price, NOT by flag
-      // (only 3 flags: hashing by them would recreate the skew) and NOT
-      // round-robin (r12: keyless repartition pays a hidden serial
-      // sortBeforeRepartition on the one-split scan, SPARK-23207)
-      val li = t(s, d, "lineitem")
-        .repartition(s.sparkContext.defaultParallelism, col("l_extendedprice"))
+      // spread so the exact-percentile partial buffers build in parallel;
+      // on the near-unique price, not the 3-value flag, which would skew
+      val li = Spread(t(s, d, "lineitem"), "l_extendedprice")
         .select(col("l_returnflag").as("flag"), col("l_extendedprice").as("x"))
       // r12: primitive-buffer exact percentile; DOUBLE cast injective on
       // DECIMAL(15,2) (the q41 argument) — bit-identical
@@ -1853,14 +1823,12 @@ object Queries {
       val x = dec(col("l_quantity"))
       val y = dec(col("l_extendedprice"))
       def dbl(c: Column): Column = c.cast("double")
-      // r12: project to the 3 needed columns and spread the single-split
-      // scan (q77 recipe) — the five DECIMAL(38,4) partial sums ran as ONE
-      // 1.3 s task on the one-row-group testdata file; hashed on the
-      // near-unique price (keyless round-robin pays a hidden serial
-      // sortBeforeRepartition; the 3-value flag would recreate the skew)
-      t(s, d, "lineitem")
-        .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))
-        .repartition(s.sparkContext.defaultParallelism, col("l_extendedprice"))
+      // project to the 3 needed columns and spread so the five decimal
+      // partial sums do not run as one task; on the near-unique price,
+      // not the 3-value flag, which would skew
+      Spread(t(s, d, "lineitem")
+          .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice")),
+          "l_extendedprice")
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
           sum(x).as("sx"), sum(y).as("sy"),
@@ -2340,11 +2308,10 @@ object Queries {
       val slope =
         (dbl(col("n")) * dbl(col("sxy")) - dbl(col("sx")) * dbl(col("sy"))) /
         (dbl(col("n")) * dbl(col("sxx")) - dbl(col("sx")) * dbl(col("sx")))
-      // r12: the q78 recipe — project + hash-spread the single-split scan
-      // so the decimal partial sums parallelize (guide §2.5)
-      t(s, d, "lineitem")
-        .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))
-        .repartition(s.sparkContext.defaultParallelism, col("l_extendedprice"))
+      // the q78 spread, on the same key
+      Spread(t(s, d, "lineitem")
+          .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice")),
+          "l_extendedprice")
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
           sum(x).as("sx"), sum(y).as("sy"),
@@ -3250,11 +3217,10 @@ object Queries {
   private val q111 = Q("q111_winsorized",
     (s, d) => {
       // li feeds both the percentile aggregate and the clipped-mean join;
-      // without persistence the scan AND the round-robin spread shuffle run
-      // twice (exchange reuse does not fire across the aliased subtrees —
-      // the q77 lesson, Queries.scala q77_mad_outliers)
-      val li = graft.ops.Caches.track(t(s, d, "lineitem")
-        .repartition(s.sparkContext.defaultParallelism, col("l_extendedprice"))
+      // without persistence the scan AND the spread shuffle run twice
+      // (exchange reuse does not fire across the aliased subtrees — the q77
+      // lesson). Spread on the near-unique price, as q77.
+      val li = graft.ops.Caches.track(Spread(t(s, d, "lineitem"), "l_extendedprice")
         .select(col("l_returnflag").as("flag"), col("l_extendedprice").as("x")))
       // builtin exact percentile KEPT (measured both ways, r11): the
       // order-statistics form (Robust.groupedExactPercentiles, bitwise

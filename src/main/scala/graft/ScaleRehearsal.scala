@@ -223,16 +223,14 @@ object ScaleRehearsal {
       // approx_count_distinct instead of the expand-based exact distinct
       case "q144_approx" =>
         graft.ops.TextOps.distinctNgramStats(
-            Tables(spark, dir, "documents")
-              .repartition(spark.sparkContext.defaultParallelism, col("doc_id")),
+            graft.ops.Spread(Tables(spark, dir, "documents"), "doc_id"),
             col("source"), col("text"), maxN = 3, approxRsd = Some(0.05))
           .orderBy(col("source"), col("n"))
       // q141's production face, measured: GK-sketch threshold cuts +
       // narrow assignment instead of the exact per-language ntile window
       case "q141_threshold" =>
         graft.ops.TextOps.pplBucketsByThreshold(
-            Tables(spark, dir, "documents")
-              .repartition(spark.sparkContext.defaultParallelism, col("doc_id")),
+            graft.ops.Spread(Tables(spark, dir, "documents"), "doc_id"),
             col("doc_id"), col("text"), col("lang"),
             trainGate = graft.ops.Mix.hashGate(col("doc_id")) < 500)
           .orderBy(col("doc_id"))

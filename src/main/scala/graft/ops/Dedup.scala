@@ -231,13 +231,8 @@ object Dedup {
   def minhashNearDups(docs: DataFrame, threshold: Double = 0.5,
                       k: Int = 32, bands: Int = 8,
                       maxBucketSize: Option[Int] = None): DataFrame = {
-    // Spread the corpus before the (CPU-heavy) shingle/signature pass — a
-    // single parquet row group must not pin the whole stage to one core.
-    // numPartitions is explicit so AQE doesn't coalesce the tiny-by-bytes
-    // (but CPU-heavy) shuffle back down to one partition.
-    val parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    val text = docs.select(col("doc_id"), col("text"))
-      .repartition(parallelism, col("doc_id"))
+    // spread before the CPU-heavy shingle/signature pass
+    val text = Spread(docs.select(col("doc_id"), col("text")), "doc_id")
     // The staged (doc_id, hashes) frame feeds three consumers — the
     // signature/band pass and BOTH sides of the candidate verify join.
     // Without persistence each consumer re-runs the shingle kernel over the
@@ -286,9 +281,7 @@ object Dedup {
   }
 
   def minhashIndex(corpus: DataFrame, k: Int = 32, bands: Int = 8): MinHashIndex = {
-    val parallelism = corpus.sparkSession.sparkContext.defaultParallelism
-    val staged = shingled(corpus.select(col("doc_id"), col("text"))
-        .repartition(parallelism, col("doc_id")))
+    val staged = shingled(Spread(corpus.select(col("doc_id"), col("text")), "doc_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     MinHashIndex(staged, lshBands(staged, k, bands), k, bands, Seq(staged))
   }
@@ -306,9 +299,7 @@ object Dedup {
     * [[minhashProbe]] contract, enforced by the caller's id scheme).
     */
   def minhashIndexMerge(index: MinHashIndex, newDocs: DataFrame): MinHashIndex = {
-    val parallelism = newDocs.sparkSession.sparkContext.defaultParallelism
-    val newStaged = shingled(newDocs.select(col("doc_id"), col("text"))
-        .repartition(parallelism, col("doc_id")))
+    val newStaged = shingled(Spread(newDocs.select(col("doc_id"), col("text")), "doc_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // EAGER: the increment's shingle pass runs now, while `newDocs` is still
     // valid — a foreachBatch frame dies with its trigger, and the merged
@@ -358,9 +349,7 @@ object Dedup {
     */
   def minhashProbe(index: MinHashIndex, incoming: DataFrame,
                    threshold: Double = 0.5): DataFrame = {
-    val parallelism = incoming.sparkSession.sparkContext.defaultParallelism
-    val incStaged = shingled(incoming.select(col("doc_id"), col("text"))
-      .repartition(parallelism, col("doc_id")))
+    val incStaged = shingled(Spread(incoming.select(col("doc_id"), col("text")), "doc_id"))
     val incBands = lshBands(incStaged, index.k, index.nBands)
     val cand = incBands.select(col("doc_id").as("new_id"), col("band"), col("band_key"))
       .join(index.bands.select(col("doc_id").as("dup_of"), col("band"), col("band_key")),
@@ -422,7 +411,6 @@ object Dedup {
   def exactNearDups(docs: DataFrame, threshold: Double = 0.5, w: Int = 3,
                     strategy: String = "count",
                     maxDf: Option[Int] = None): DataFrame = {
-    val parallelism = docs.sparkSession.sparkContext.defaultParallelism
     val src = docs.select(col("doc_id"), col("text"))
 
     if (strategy == "count") {
@@ -433,7 +421,7 @@ object Dedup {
         .select(col("a_id"), col("b_id"), col("jac"))
     }
 
-    val stagedV = shingled(src.repartition(parallelism, col("doc_id")), w)
+    val stagedV = shingled(Spread(src, "doc_id"), w)
     val posting =
       if (strategy == "full") stagedV.select(col("doc_id"), explode(col("hashes")).as("h"))
       else {
@@ -473,8 +461,7 @@ object Dedup {
     */
   private def postingPairCounts(src: DataFrame, w: Int, maxDf: Option[Int],
                                 observeName: String): DataFrame = {
-    val parallelism = src.sparkSession.sparkContext.defaultParallelism
-    val staged = Caches.track(src.repartition(parallelism, col("doc_id"))
+    val staged = Caches.track(Spread(src, "doc_id")
       .select(col("doc_id"), graft.functions.gfn.shingle_hashes64(col("text"), w).as("hashes")))
     val sizes = staged.select(col("doc_id"), size(col("hashes")).as("sz"))
     val posting = staged.select(col("doc_id"), explode(col("hashes")).as("h"))
@@ -589,9 +576,7 @@ object Dedup {
     */
   def simhashNearDups(docs: DataFrame, maxHamming: Int = 3,
                       maxBucketSize: Option[Int] = None): DataFrame = {
-    val parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    val text = docs.select(col("doc_id"), col("text"))
-      .repartition(parallelism, col("doc_id"))
+    val text = Spread(docs.select(col("doc_id"), col("text")), "doc_id")
     hammingNearDupsFromSigs(
       text.select(col("doc_id").as("id"), simhash(col("text")).as("sig")),
       maxHamming, maxBucketSize, capMetric = "simhash_lsh_cap")
@@ -609,9 +594,7 @@ object Dedup {
   def simhashNearDupsAuto(docs: DataFrame, maxHamming: Int = 3,
                           targetBucketSize: Int = 64,
                           maxBucketSize: Option[Int] = None): DataFrame = {
-    val parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    val text = docs.select(col("doc_id"), col("text"))
-      .repartition(parallelism, col("doc_id"))
+    val text = Spread(docs.select(col("doc_id"), col("text")), "doc_id")
     hammingNearDupsFromSigs(
       text.select(col("doc_id").as("id"), simhash(col("text")).as("sig")),
       maxHamming, maxBucketSize, capMetric = "simhash_lsh_cap",
@@ -794,9 +777,7 @@ object Dedup {
     * representation (the q104/Decontam recipe: grams never travel as
     * strings). (doc_id, pos, gram_hash, ord). */
   private def gramFrame(docs: DataFrame, k: Int): DataFrame = {
-    val parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .repartition(parallelism, col("doc_id"))
+    Spread(docs.select(col("doc_id"), split(col("text"), " ").as("toks")), "doc_id")
       .where(size(col("toks")) >= k)
       .select(col("doc_id"), posexplode(expr(
         s"transform(sequence(0, size(toks) - $k), " +

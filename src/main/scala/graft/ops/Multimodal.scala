@@ -262,10 +262,8 @@ object Multimodal {
     */
   def mediaTable(docs: DataFrame)(implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    // codec CPU (PNG/WAV/MJPEG encoders here, like decoders downstream)
-    // must not be pinned to one input split; spread by id first
-    docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
+    // spread for the codec CPU (PNG/WAV/MJPEG encoders)
+    Spread(docs.select(col("doc_id").cast("long"), col("text")), "doc_id").as[(Long, String)]
       .map { case (id, text) =>
         val kind =
           if (id % 3 == 0) "image" else if (id % 3 == 1) "audio" else "video"

@@ -100,9 +100,7 @@ object Similarity {
     */
   def knnJoin(corpus: DataFrame, queries: DataFrame, k: Int,
               scorer: (Column, Column) => Column = cosine): DataFrame = {
-    val parallelism = corpus.sparkSession.sparkContext.defaultParallelism
-    corpus.select(col("vec_id"), col("embedding"))
-      .repartition(parallelism, col("vec_id")) // single-split scan guard
+    Spread(corpus.select(col("vec_id"), col("embedding")), "vec_id")
       .crossJoin(broadcast(queries.select(col("query_id"), col("q_emb"))))
       .select(col("query_id"), col("vec_id"),
         scorer(col("embedding"), col("q_emb")).cast("double").as("score"))
@@ -302,9 +300,7 @@ object Similarity {
   private def gatedKnn(corpus: DataFrame, queries: DataFrame, k: Int,
                        gate: Column,
                        scorer: (Column, Column) => Column): DataFrame = {
-    val parallelism = corpus.sparkSession.sparkContext.defaultParallelism
-    corpus.select(col("vec_id"), col("embedding"), col("label"))
-      .repartition(parallelism, col("vec_id")) // single-split scan guard
+    Spread(corpus.select(col("vec_id"), col("embedding"), col("label")), "vec_id")
       .crossJoin(broadcast(queries.select(
         col("query_id"), col("q_emb"), col("q_label"))))
       .where(gate)

@@ -259,4 +259,119 @@ class QueriesSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
+
+  // ---- Spread: the one single-split scan guard ----
+
+  /** The explicit-N spread exchanges a frame plans, cached subplans included
+    * (a tracked frame read three times counts once). */
+  private def spreadExchanges(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    def walk(p: SparkPlan): Seq[ShuffleExchangeExec] = p.collect {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => Seq(e)
+      case a: AdaptiveSparkPlanExec => walk(a.inputPlan)
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+    }.flatten
+    walk(df.queryExecution.sparkPlan).distinct
+  }
+
+  private def withConf[T](kv: (String, String))(body: => T): T = {
+    val prev = spark.conf.getOption(kv._1)
+    spark.conf.set(kv._1, kv._2)
+    try body
+    finally prev.fold(spark.conf.unset(kv._1))(spark.conf.set(kv._1, _))
+  }
+
+  test("a single-split scan or a non-file frame is hash-spread to defaultParallelism") {
+    import spark.implicits._
+    val n = spark.sparkContext.defaultParallelism
+    try {
+      for ((what, df) <- Seq(
+          "docsSpread" -> Queries.docsSpread(spark, sf),
+          "minhashNearDups" -> graft.ops.Dedup.minhashNearDups(Tables(spark, sf, "documents")),
+          "local rows" -> graft.ops.Spread(Seq((1L, "a")).toDF("doc_id", "text"), "doc_id"))) {
+        val ex = spreadExchanges(df)
+        assert(ex.size == 1, s"$what: $ex")
+        ex.head.outputPartitioning match {
+          case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+            assert(h.numPartitions == n, what)
+          case p => fail(s"$what: $p")
+        }
+      }
+    } finally graft.ops.Caches.release()
+  }
+
+  test("a documents scan of >= defaultParallelism splits is not spread, and results match") {
+    val dir = java.nio.file.Files.createTempDirectory("documents_64").toString
+    val docs = Tables(spark, sf, "documents")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    try {
+      docs.repartition(64).write.parquet(s"$dir/documents.parquet")
+      withConf("spark.sql.files.maxPartitionBytes" -> "1m") {
+        assert(Tables(spark, dir, "documents").rdd.getNumPartitions >=
+          spark.sparkContext.defaultParallelism)
+        assert(spreadExchanges(Queries.docsSpread(spark, dir)).isEmpty)
+        val near = graft.ops.Dedup.minhashNearDups(Tables(spark, dir, "documents"))
+        assert(spreadExchanges(near).isEmpty)
+        assert(rows(near) == rows(graft.ops.Dedup.minhashNearDups(docs)))
+        for (q <- Seq("q52_pii_redact", "q114_boilerplate_strip"))
+          assert(rows(SparkEntry.queries(q)(spark, dir)) == rows(SparkEntry.queries(q)(spark, sf)), q)
+      }
+    } finally {
+      graft.ops.Caches.release()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("a scan under dynamic pruning keeps the spread: its splits are known only at run time") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("events_by_day_spread").toString
+    try {
+      Tables(spark, sf, "events").withColumn("day", to_date(col("ts")))
+        .write.partitionBy("day").parquet(s"$dir/fact")
+      Tables(spark, sf, "events").select(to_date(col("ts")).as("day")).distinct()
+        .withColumn("keep", (dayofmonth(col("day")) === 1).cast("int"))
+        .write.parquet(s"$dir/dim")
+      // tiny splits, so without run-time pruning every scan is wide enough
+      withConf("spark.sql.files.maxPartitionBytes" -> "16") {
+        def joined = spark.read.parquet(s"$dir/fact")
+          .join(spark.read.parquet(s"$dir/dim").filter(col("keep") === 1).select("day"), "day")
+        assert(spreadExchanges(graft.ops.Spread(joined, "event_id")).size == 1)
+        withConf("spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "false") {
+          assert(spreadExchanges(graft.ops.Spread(joined, "event_id")).isEmpty)
+        }
+      }
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("Spread decides from the plan without running a job") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    // built first: a table's first read infers its schema with a job
+    val frames = Seq(Tables(spark, sf, "documents") -> "doc_id",
+      Tables(spark, sf, "events").filter($"event_id" > 3) -> "event_id",
+      Seq((1L, "a")).toDF("doc_id", "text") -> "doc_id")
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup("spread-decide", "Spread")
+      for ((df, key) <- frames) graft.ops.Spread(df, key)
+      // a later job in another group: once it is seen, any earlier one was
+      sc.setJobGroup("fence", "fence")
+      spark.range(1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!groups.contains("fence") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("fence"))
+      assert(!groups.contains("spread-decide"), groups)
+    } finally sc.removeSparkListener(l)
+  }
 }

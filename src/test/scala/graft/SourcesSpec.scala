@@ -79,6 +79,9 @@ class SourcesSpec extends AnyFunSuite {
     val exprs = PlanAudit.expressions(plan)
     assert(exprs.count(_.isInstanceOf[UnBase64]) == 1, plan.toString)
     assert(exprs.count(_.isInstanceOf[JsonToStructs]) == 1, plan.toString)
+    // the envelope's ids are in the input but not in the parsed schema
+    assert(exprs.collect { case j: JsonToStructs => j.schema.catalogString }
+      .forall(s => !s.contains("eventID") && !s.contains("eventSourceARN")), plan.toString)
   }
 
   test("Kinesis connector binding maps the reference ESM knobs 1:1 (O1)") {
