@@ -1,11 +1,12 @@
 package graft
 
 /** Dev smoke: emulates the driver's t1 check (entry rows > 0) and prints a
-  * named query's result/plan when given args: [queryName [sfDir]].
+  * named query's result/plan when given args: [queryName [sfDir]]. The
+  * session has `SPARK_GRAFT_CPUS` cores (default 8), like the other mains.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkEntry.session(8)
+    val spark = SparkEntry.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     if (args.isEmpty) {
       val df = SparkEntry.entry(spark)
       df.show(20, truncate = false)

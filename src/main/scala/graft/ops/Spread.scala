@@ -1,9 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.DynamicPruning
-import org.apache.spark.sql.execution.{FileSourceScanExec, PartitionedFileUtil}
-import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.col
 
 /** The one spread decision before a CPU-heavy stage. An sf-scale table is
@@ -15,43 +13,34 @@ import org.apache.spark.sql.functions.col
   * coalesce the byte-tiny exchange back to one partition; keyed, because
   * `HashPartitioning(key)` also serves later operators clustered on the key.
   *
-  * A real-scale scan already has thousands of splits, and there the spread
+  * A real-scale scan already reads thousands of files, and there the spread
   * is a full-table shuffle for nothing. So the frame comes back unchanged
-  * when every file scan under it plans at least `defaultParallelism` splits,
-  * counted from the planned scans' file listings; deciding runs no job.
-  * Where the plan alone cannot give the count (a non-file leaf: local rows,
-  * a cached or checkpointed frame, a streaming batch; a bucketed scan; a
-  * scan under dynamic pruning) the spread is kept.
+  * when every leaf under it is a file relation of at least
+  * `defaultParallelism` files. Whole files, not byte splits: Spark cuts a
+  * large file into byte ranges, but only the range holding a row group's
+  * midpoint returns rows, so one single-row-group file is one reading task
+  * however many ranges it plans. The count comes from the analyzed plan's
+  * cached file listings, so deciding runs no job and no optimizer or
+  * planner pass. Where that plan cannot give the count (a non-file leaf:
+  * local rows, a checkpointed frame, a streaming source; a partitioned
+  * relation, whose files are known only after static or dynamic partition
+  * pruning; a bucketed one, read one task per bucket) the spread is kept.
   */
 object Spread {
 
   def apply(df: DataFrame, key: String): DataFrame = {
     val n = df.sparkSession.sparkContext.defaultParallelism
-    if (fewestSplits(df).exists(_ >= n)) df else df.repartition(n, col(key))
+    if (fewestFiles(df).exists(_ >= n)) df else df.repartition(n, col(key))
   }
 
-  // the fewest read partitions of any file scan under df; None when some
-  // leaf's count is unknown without running a job
-  private def fewestSplits(df: DataFrame): Option[Int] = {
-    val leaves = if (df.isStreaming) Nil else df.queryExecution.sparkPlan.collectLeaves()
-    val counts = leaves.collect {
-      case s: FileSourceScanExec if !s.bucketedScan && s.optionalBucketSet.isEmpty &&
-          !s.partitionFilters.exists(_.exists(_.isInstanceOf[DynamicPruning])) => splits(s)
+  // the fewest files of any relation under df; None when some leaf's
+  // count is unknown before pruning or without running a job
+  private def fewestFiles(df: DataFrame): Option[Int] = {
+    val leaves = df.queryExecution.analyzed.collectLeaves()
+    val counts = leaves.collect { case l: LogicalRelation => l.relation }.collect {
+      case r: HadoopFsRelation if r.partitionSchema.isEmpty && r.bucketSpec.isEmpty =>
+        r.location.inputFiles.length
     }
     if (leaves.nonEmpty && counts.size == leaves.size) Some(counts.min) else None
-  }
-
-  // FileSourceScanExec.createReadRDD's packing, without building a reader
-  private def splits(scan: FileSourceScanExec): Int = {
-    val session = scan.relation.sparkSession
-    val listing = scan.selectedPartitions
-    val maxSplitBytes = FilePartition.maxSplitBytes(session, listing)
-    val files = listing.filePartitionIterator.flatMap { p =>
-      p.files.flatMap { f =>
-        val splitable = scan.relation.fileFormat.isSplitable(session, scan.relation.options, f.getPath)
-        PartitionedFileUtil.splitFiles(f, f.getPath, splitable, maxSplitBytes, p.values)
-      }
-    }.toSeq.sortBy(-_.length)
-    FilePartition.getFilePartitions(session, files, maxSplitBytes).size
   }
 }

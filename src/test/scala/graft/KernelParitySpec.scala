@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkTestSession.withConf
+
 import graft.functions.{GzipUtil, gfn}
 
 /** Every `gfn` kernel over edge rows (null, "", whitespace-only, trailing
@@ -171,16 +173,6 @@ class KernelParitySpec extends AnyFunSuite {
   /** No whole-stage codegen, interpreted projections. */
   private val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   /** id-ordered results, plus whether a whole-stage codegen node ran. */
   private def run(k: Column): (Seq[Row], Boolean) = {

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkTestSession.withConf
+
 /** Catalog-wide smoke + plan audits at sf0.001: every query must run, and
   * the headline plans must have the shape we'd want at 100 TB (pushdown,
   * broadcast dims, top-k without global sort, no cartesian anywhere).
@@ -277,33 +279,33 @@ class QueriesSpec extends AnyFunSuite {
     walk(df.queryExecution.sparkPlan).distinct
   }
 
-  private def withConf[T](kv: (String, String))(body: => T): T = {
-    val prev = spark.conf.getOption(kv._1)
-    spark.conf.set(kv._1, kv._2)
-    try body
-    finally prev.fold(spark.conf.unset(kv._1))(spark.conf.set(kv._1, _))
-  }
-
-  test("a single-split scan or a non-file frame is hash-spread to defaultParallelism") {
+  test("a single-file scan or a non-file frame is hash-spread to defaultParallelism") {
     import spark.implicits._
     val n = spark.sparkContext.defaultParallelism
+    def check(what: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      val ex = spreadExchanges(df)
+      assert(ex.size == 1, s"$what: $ex")
+      ex.head.outputPartitioning match {
+        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+          assert(h.numPartitions == n, what)
+        case p => fail(s"$what: $p")
+      }
+    }
     try {
-      for ((what, df) <- Seq(
-          "docsSpread" -> Queries.docsSpread(spark, sf),
-          "minhashNearDups" -> graft.ops.Dedup.minhashNearDups(Tables(spark, sf, "documents")),
-          "local rows" -> graft.ops.Spread(Seq((1L, "a")).toDF("doc_id", "text"), "doc_id"))) {
-        val ex = spreadExchanges(df)
-        assert(ex.size == 1, s"$what: $ex")
-        ex.head.outputPartitioning match {
-          case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
-            assert(h.numPartitions == n, what)
-          case p => fail(s"$what: $p")
-        }
+      check("docsSpread", Queries.docsSpread(spark, sf))
+      check("minhashNearDups", graft.ops.Dedup.minhashNearDups(Tables(spark, sf, "documents")))
+      check("local rows", graft.ops.Spread(Seq((1L, "a")).toDF("doc_id", "text"), "doc_id"))
+      // cut into >= n byte ranges, the one-row-group file is still one reading task
+      withConf("spark.sql.files.maxPartitionBytes" -> "1k") {
+        assert(Tables(spark, sf, "documents").rdd.getNumPartitions >= n)
+        check("docsSpread, split file", Queries.docsSpread(spark, sf))
+        check("minhashNearDups, split file",
+          graft.ops.Dedup.minhashNearDups(Tables(spark, sf, "documents")))
       }
     } finally graft.ops.Caches.release()
   }
 
-  test("a documents scan of >= defaultParallelism splits is not spread, and results match") {
+  test("a documents scan of >= defaultParallelism files is not spread, and results match") {
     val dir = java.nio.file.Files.createTempDirectory("documents_64").toString
     val docs = Tables(spark, sf, "documents")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
@@ -325,7 +327,7 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
-  test("a scan under dynamic pruning keeps the spread: its splits are known only at run time") {
+  test("a partitioned scan keeps the spread: its files are known only after pruning") {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("events_by_day_spread").toString
     try {
@@ -334,15 +336,13 @@ class QueriesSpec extends AnyFunSuite {
       Tables(spark, sf, "events").select(to_date(col("ts")).as("day")).distinct()
         .withColumn("keep", (dayofmonth(col("day")) === 1).cast("int"))
         .write.parquet(s"$dir/dim")
-      // tiny splits, so without run-time pruning every scan is wide enough
-      withConf("spark.sql.files.maxPartitionBytes" -> "16") {
-        def joined = spark.read.parquet(s"$dir/fact")
-          .join(spark.read.parquet(s"$dir/dim").filter(col("keep") === 1).select("day"), "day")
-        assert(spreadExchanges(graft.ops.Spread(joined, "event_id")).size == 1)
-        withConf("spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "false") {
-          assert(spreadExchanges(graft.ops.Spread(joined, "event_id")).isEmpty)
-        }
-      }
+      val fact = spark.read.parquet(s"$dir/fact")
+      assert(fact.inputFiles.length >= spark.sparkContext.defaultParallelism)
+      val oneDay = fact.filter(col("day") === fact.agg(min("day")).head().getDate(0))
+      val joined = fact.join(
+        spark.read.parquet(s"$dir/dim").filter(col("keep") === 1).select("day"), "day")
+      for ((what, df) <- Seq("whole" -> fact, "one day" -> oneDay, "dynamic pruning" -> joined))
+        assert(spreadExchanges(graft.ops.Spread(df, "event_id")).size == 1, what)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
